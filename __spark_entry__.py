@@ -2,78 +2,22 @@
 
 ``entry(spark)`` runs the flagship hourly transfer-volume-shaped query
 (SURVEY.md §2 A2/Q5) over sf0.001. ``queries()`` / ``oracle_sql()`` expose
-the SURVEY §2 operator inventory + scale extensions, each phrased over the
-driver's tables with a DuckDB oracle twin (see
-``defi_etl_platform_sqlglot_implementation__spark/registry.py`` for the
-float-parity policy).
+every registered gate, each phrased over the driver's tables with a DuckDB
+oracle twin (see ``defi_etl_platform_sqlglot_implementation__spark/registry.py``
+for the float-parity policy), in the verification-window order that
+``gates.py`` derives from ``GREEN_LEDGER.json``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import cache
 
 from pyspark.sql import DataFrame, SparkSession
 
-from defi_etl_platform_sqlglot_implementation__spark import registry
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_tpch  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_ts  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_adv  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_sql2  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm2  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_decode  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm3  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_adv2  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_transpile  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_tpch2  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_tpch3  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_media  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm4  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm5  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm6  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm7  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm8  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm9  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm10  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm11  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm12  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm13  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm14  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm15  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm16  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm17  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm18  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm19  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm20  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm21  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm22  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm23  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm24  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm25  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm26  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm27  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm28  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm29  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm30  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm31  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm32  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm33  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm34  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm35  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm36  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm37  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm38  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm39  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm40  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm41  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm42  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm43  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm44  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm45  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm46  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm47  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm48  # noqa: F401 — fills registry dicts
-from defi_etl_platform_sqlglot_implementation__spark import registry_llm49  # noqa: F401 — fills registry dicts
+from defi_etl_platform_sqlglot_implementation__spark import gates, registry
+
+gates.discover()
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -81,260 +25,16 @@ def entry(spark: SparkSession) -> DataFrame:
     return registry.QUERIES["transfer_volume_hourly"](spark, "/root/testdata/sf0.001")
 
 
-# Verification priority, re-derived for round 12 from CORRECTNESS_r11
-# (50/50 green), then RECOMPOSED by the r12 optimization phase:
-# changed-since-green means not-green, so every gate whose executed
-# code path the r12 optimization diff reaches (AST call analysis over
-# the touched operators) re-earns its driver row this round.
-# Convention unchanged: no-green-row-under-current-code first,
-# LIGHT-ORACLE-FIRST / HEAVY-LAST; the list is exactly 50 entries so
-# the window composition is fully pinned.  Buckets:
-#   1. r12-OPTIMIZATION-touched (32, AST-derived from the diff): the
-#      minhash signature kernel (minhash_signatures -> every
-#      minhash_lsh_pairs consumer), the beam-search grouped kernel
-#      (the two graph gates), the fuzzy variant-key join, the PQ ADC
-#      kernel (pq_encode/ann_pq), the kNN scoring kernel
-#      (cross_cosine_scores -> the two kNN gates + the MRR gate), the
-#      train_bpe try/finally (the BPE family), and the thread-overlap
-#      composites (cross_modal_dedup, dedup_token_savings);
-#   2. _RECONFIRM (VERDICT r11 #9, oldest-first by actual newest
-#      driver row): the r12 optimization set again displaced most of
-#      the planned r01/r02 rotation — the 6 remaining r01 names + the
-#      11 alphabetically-first r02 names take the free slots; the
-#      remaining 22 r02 names (priority_top_orders, then the tail from
-#      reservoir_sample_global on) lead the r13 rotation;
-#   3. within bucket 1 the heavy CC/composite gates run LAST so any
-#      degradation burns only their own slots.
-_PRIORITY = [
-    # -- bucket 1: r12-touched, light oracles first --
-    "fuzzy_customer_pairs",
-    "knn_label_accuracy_capped_eval", "retrieval_mrr_capped_eval",
-    "knn_label_accuracy",
-    "similarity_ann_pq", "pq_rerank_recall_curve",
-    "graph_ann_beam_search", "graph_ann_recall_curve",
-    "bpe_vocab", "bpe_encode_segments", "bpe_vocab_pruning_curve",
-    "bpe_fertility_by_lang",
-    "dedup_minhash_lsh", "dedup_minhash_normalized",
-    "dedup_minhash_incremental", "dedup_rate_by_batch",
-    "quality_dup_quartiles", "quality_score_calibration",
-    "source_overlap_matrix", "ccnet_bucket_dup_matrix",
-    "dedup_keep_best_quality",
-    # ivf_codebook_size_curve re-enters: the r12 multi-size assignment
-    # pass (assign_clusters_multi) reaches it after the first window
-    # composition — it displaces the last reconfirm slot
-    "ivf_codebook_size_curve",
-    # -- bucket 1, heavy CC/composite tail --
-    "dedup_clusters", "dup_cluster_size_histogram",
-    "dedup_keep_canonical", "dedup_keep_newest",
-    "dedup_sample_order_effect", "ingest_transitivity_gap",
-    "curation_pipeline_v3", "curation_pipeline_v2",
-    "keep_policy_matrix", "dedup_token_savings", "cross_modal_dedup",
-    # -- bucket 2: _RECONFIRM — the r01/r02 rotation debt, oldest
-    #    driver row first (r01 cohort, then r02 alphabetical) --
-    "rolling_p90", "rolling_p90_partitioned", "salted_group_sum",
-    "similarity_lsh_pairs", "similarity_topk", "stress_test_table",
-    "asof_price_join", "bernoulli_hash_sample", "big_quantity_orders",
-    "cohort_retention", "contamination_overlap", "curation_funnel",
-    "event_type_pivot", "hourly_daily_rollup", "lone_late_suppliers",
-    "multimodal_decode_real", "order_price_quartiles",
-]
-
-# Driver-green gates deliberately RE-OCCUPYING window slots this round
-# (cheap evidence refresh for the oldest green rows).  Must be exactly
-# the _PRIORITY ∩ _DRIVER_GREEN overlap — tests/test_entry_order.py
-# enforces that, so a name can never sit ambiguously in both ledgers
-# again (the r7 bookkeeping failure).
-_RECONFIRM: list[str] = [
-    "rolling_p90", "rolling_p90_partitioned", "salted_group_sum",
-    "similarity_lsh_pairs", "similarity_topk", "stress_test_table",
-    "asof_price_join", "bernoulli_hash_sample", "big_quantity_orders",
-    "cohort_retention", "contamination_overlap", "curation_funnel",
-    "event_type_pivot", "hourly_daily_rollup", "lone_late_suppliers",
-    "multimodal_decode_real", "order_price_quartiles",
-]
-
-
-# Green driver row exists (r01 ∪ … ∪ r11) and the implementation is
-# unchanged since that row.  NOTE: every _PRIORITY bucket-1 query
-# (changed after its green row — the r12 optimization diff reaches the
-# minhash/LSH consumers, the kNN/PQ scoring kernels, the beam-search
-# gates, the fuzzy variant join, the BPE family, and the two
-# thread-overlap composites, each removed from this set and re-run via
-# bucket 1) is deliberately ABSENT here — the convention is that
-# changed-since-green means not-green, regardless of prior rows.  The
-# r11 window's 50 green gates whose code the r12 diff does NOT reach
-# (the semdedup/IVF/k-means families, the curve gates, the repeat/span
-# machinery, ecc/cluster_diameter) moved IN.  _RECONFIRM names ARE
-# here (green + unchanged) AND in _PRIORITY bucket 2 — that overlap is
-# exactly the _RECONFIRM ledger, enforced by tests/test_entry_order.py.
-_DRIVER_GREEN = {
-    # -- green in r11 (CORRECTNESS_r11.json, 50/50), untouched by the
-    #    r12 optimization diff --
-    # (ivf_codebook_size_curve left this set when the r12
-    # assign_clusters_multi pass reached it — bucket 1 re-runs it)
-    "graph_ann_two_stage", "repeat_class_cut_plan",
-    "graph_two_stage_nprobe_curve", "span_dedup_sample_effect",
-    "contamination_ngram_curve", "gopher_strictness_curve",
-    "secret_entropy_sweep",
-    "maximal_repeat_inventory",
-    "semdedup_pairs", "semdedup_recall",
-    "semdedup_pairs_trained", "semdedup_recall_trained",
-    "semdedup_pairs_probed", "semdedup_recall_probed",
-    "dedup_embedding_canonical",
-    "similarity_ann_ivf_trained", "similarity_ann_recall_trained",
-    "similarity_ann_ivf", "similarity_ann_recall",
-    "similarity_ann_ivf_fullprobe", "ivf_balance_report",
-    "ivf_nprobe_recall_curve", "cluster_prototype_pruning",
-    "kmeans_silhouette", "cluster_distance_outliers",
-    "ecc_by_threshold", "cluster_diameter_report",
-    # -- green in r10 (CORRECTNESS_r10.json, 50/50 — the wave 42-44
-    #    window + the CC/_PERTURB-touched set), minus the r12-touched
-    #    (bucket 1) --
-    "span_dedup_token_savings", "knn_graph_edges",
-    "secret_screening_report", "quality_flag_drift",
-    "covariance_power_iteration", "embedding_projection_outliers",
-    # -- green in r09 (CORRECTNESS_r09.json, 50/50 — the wave 32-41
-    #    window), minus the r12-touched; untouched since --
-    "kanonymity_report", "source_lang_datasheet", "doc_suffix_containment",
-    "lsh_bucket_skew",
-    "dsir_resample_draw", "blocklist_screening_report",
-    "chunk_dedup_report",
-    "minhash_k_error_sweep", "chunk_level_contamination",
-    "normalization_impact_report", "dp_laplace_counts",
-    "quality_filter_venn", "feature_hash_collision_report",
-    "source_js_divergence_matrix", "token_freq_drift", "bloom_fpr_curve",
-    "embedding_batch_drift", "nb_source_classifier",
-    "ccnet_perplexity_buckets", "mmr_diverse_selection",
-    # -- green in r08 (CORRECTNESS_r08.json, 50/50 — the wave 16-31
-    #    window), minus the gates the r9 CC/drift/NB edits touched and
-    #    the r12-touched --
-    "dup_span_granularity", "doremi_source_weights",
-    "minhash_band_sweep", "jaccard_threshold_sweep", "random_projection_recall", "pair_alignment_spans",
-    "span_corruption_plan", "doc_prefix_containment",
-    "quality_token_budget_cutoff", "boilerplate_block_removal",
-    "epoch_repetition_plan",
-    "contrastive_pair_mining", "ngram_novelty_profile",
-    "repetition_tail_truncation", "label_balance_plan",
-    "hash_shard_skew",
-    "pii_inventory",
-    "doc_length_histogram", "event_debounce", "embedding_dim_correlation",
-    "token_pmi_collocations", "source_unigram_kl",
-    "distinct_ngram_diversity", "zipf_fit_by_source",
-    "ngram_entropy_curve",
-    "url_canonicalize", "url_domain_dedup", "domain_token_budget",
-    "simhash_recall",
-    # -- green in r07 (CORRECTNESS_r07.json, 50/50), minus the
-    #    r12-touched; untouched since --
-    "paragraph_dup_spans", "paragraph_dedup_reassembly",
-    "decontamination_incremental",
-    "paragraph_dup_rate_filter", "dedup_variant_agreement",
-    "linear_model_confusion", # -- green in r06 (CORRECTNESS_r06.json), untouched by the r7
-    #    assignment-fold / CC-round-budget changes --
-    "sequence_packing", "tokens_per_source_budget", "ngram_novelty",
-    "minhash_estimate_error", "lang_confusion_matrix",
-    "embedding_norm_outliers", "stratified_split_assignment",
-    "split_leakage_pairs", "oov_rate", "doc_length_percentile_clip",
-    "cross_source_dup_matrix", "perplexity_bucket_mix",
-    "spearman_len_distinct", "source_temperature_weights", "vocab_growth_curve",
-    "split_decontamination_report", "length_bucket_batching",
-    "vocab_coverage_curve", "embedding_dim_stats",
-    "deterministic_downsample", "dsir_importance_weights",
-    "embedding_sq8_error", "heldout_bigram_perplexity",
-    "source_sampling_plan", "winnowing_fingerprints",
-    "winnowing_candidate_pairs", "dedup_ngram_jaccard",
-    "pagerank_nation_graph", "bfs_trade_distance",
-    "transfer_volume_hourly",
-    "topk_parts_by_quantity", "hour_spine_join",
-    "order_lineitem_pairing", "event_projection", "block_range_scan",
-    "rolling_p90", "rolling_var_minperiods", "rolling_var_cvar",
-    "rolling_var_cvar_partitioned", "var_cvar_scalar", "stress_test_table",
-    "il_curve", "mev_scores", "distinct_counts", "summary_stats",
-    "selector_map_lookup", "json_props_extract", "time_formats",
-    "last_k_events", "routed_union", "dedup_exact",
-    "dedup_simhash_signatures", "dedup_simhash_weighted",
-    "dedup_char_jaccard", "dedup_simhash_pairs", "similarity_topk",
-    "similarity_lsh_pairs", "text_profile", "lang_id", "doc_fingerprint",
-    "multimodal_meta", "multimodal_decode_fake", "multimodal_decode_real",
-    "multimodal_frame_sample", "rolling_p90_partitioned", "salted_group_sum",
-    "hourly_daily_rollup", "dedup_embedding_cosine",
-    "customers_without_urgent_orders", "brands_with_shipped_parts",
-    "user_event_sets", "priority_top_orders", "asof_price_join",
-    "session_stats", "sliding_window_range_join", "stratified_sample",
-    "view_purchase_attribution", "user_event_gaps", "secondary_sort_deltas",
-    "bernoulli_hash_sample", "reservoir_sample_global",
-    "big_quantity_orders", "lone_late_suppliers",
-    "order_price_quartiles", "rolling_hour_user_value", "event_type_pivot",
-    "value_quantiles_by_type",
-    "token_vocab_topk", "cohort_retention", "segment_name_listagg",
-    "source_numeric_profile",
-    "user_click_purchase_ratio", "contamination_overlap",
-    "token_shard_assignment", "curation_funnel",
-    "transfer_decode_roundtrip", "swap_decode_roundtrip",
-    # -- green in r03 (driver rows in CORRECTNESS_r03.json) --
-    "rolling_var_minperiods_partitioned",
-    "token_entropy", "salted_join_brand_qty", "asof_price_join_forward",
-    "contamination_bloom_gated",
-    "curation_pipeline_e2e", "source_mix_rebalance",
-    "dedup_char_jaccard_capped",
-    "transfer_volume_hourly_approx_check",
-    "twap_per_user", "funnel_view_click_purchase", "event_transition_matrix",
-    "hourly_locf_fill", "user_share_of_type_value",
-    "value_quantiles_approx_check", "tfidf_top_terms",
-    "doc_unigram_surprise", "doc_chunks", "embedding_int8_quantize",
-    "doc_repetition_profile", "pii_scrub", "bm25_search",
-    "inverted_index_postings", "weighted_sample_topk", "hybrid_search_rrf",
-    "token_freq_cms",
-    "substring_dup_spans", "curation_clip_spans",
-    "scd2_history", "grouping_sets_metrics",
-    # -- green in r04 (driver rows in CORRECTNESS_r04.json; 45 of the 50
-    #    window entries — the 5 fails are _PRIORITY bucket 1) --
-    "winsorized_stats", "mad_robust", "ewma_user_value", "triangle_count",
-    "column_profile", "dq_violations", "zorder_locality",
-    "value_time_correlation", "lang_source_chi2",
-    "ols_value_trend", "orders_snapshot_diff", "transpiled_position_concat",
-    "bi_nation_trade_volume", "part_qty_share_threshold",
-    "top_revenue_suppliers", "dominant_part_suppliers", "min_cost_supplier",
-    "order_priority_check", "forecast_revenue_change", "nation_market_share",
-    "product_type_profit", "returned_item_customers",
-    "customer_order_distribution", "promo_revenue_share",
-    "supplier_part_variety", "disjunctive_bracket_revenue",
-    "image_ahash_signatures", "image_ahash_pairs",
-    "audio_fingerprint_signatures", "audio_fingerprint_pairs",
-    "swap_price_impact", "block_agg_daily", "region_enrichment",
-    "avg_yearly_small_qty", "rich_idle_customers", "returnflag_cube",
-    "order_price_histogram", "returnflag_metrics_unpivot",
-    "pricing_summary", "shipping_priority", "local_supplier_volume",
-    "eip55_checksum_addresses",
-    # -- green in r05 (driver rows in CORRECTNESS_r05.json; the 25 slots
-    #    that survived the sweep OOM), MINUS the 7 touched by the r6
-    #    materialization refactor (those re-run via _PRIORITY bucket 3) --
-    "transpiled_hourly_rollup", "transpiled_user_buckets",
-    "transpiled_monthly_orders", "transpiled_rank_over",
-    "linestatus_priority_counts", "dedup_incremental", "doc_bigram_logprob", "embedding_mean_pool",
-    "gopher_quality_flags", "minhash_containment",
-    "multimodal_resize_real", "reciprocal_trade_pairs",
-    "schema_evolution_read", "transpiled_listagg",
-    # rows-only by design (no oracle possible): keep at the tail — the
-    # *_check companion carries the value evidence.  (bpe_vocab and
-    # similarity_ann_ivf left this set in r4 session 2: both gained
-    # exact DuckDB oracles — unrolled-CTE BPE training, full IVF
-    # pipeline replication — so they re-run as "new".  Only the HLL
-    # sketch query remains genuinely engine-specific.)
-    "transfer_volume_hourly_approx",
-}
-
-
-def _ordered(d: dict) -> dict:
-    head = {k: d[k] for k in _PRIORITY if k in d}
-    new = {k: v for k, v in d.items()
-           if k not in head and k not in _DRIVER_GREEN}  # new this round → next
-    tail = {k: v for k, v in d.items() if k not in head and k not in new}
-    return {**head, **new, **tail}
+@cache
+def _window() -> tuple[str, ...]:
+    """Computed once per import: the fingerprint walk parses the package."""
+    fps = gates.fingerprints(registry.QUERIES, registry.ORACLES)
+    return tuple(gates.order(registry.QUERIES, registry.ORACLES, fps, gates.load_ledger()))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _ordered(dict(registry.QUERIES))
+    return {name: registry.QUERIES[name] for name in _window()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return _ordered(dict(registry.ORACLES))
+    return {name: registry.ORACLES[name] for name in _window() if name in registry.ORACLES}

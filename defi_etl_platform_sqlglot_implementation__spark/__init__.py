@@ -22,6 +22,28 @@ Layout
 - ``serving``    : the four chart-endpoint computations (JSON shapes)
 - ``pipeline``   : run_batch() orchestrator mirroring the reference's
                    ``BlockchainETLPipeline.run`` output contract
+- ``gates``      : registry discovery, gate code fingerprints and the
+                   driver's verification window
+- ``session()``  : the one local SparkSession factory (below)
 """
 
 __version__ = "0.1.0"
+
+
+def session(cpus, app: str, **overrides):
+    """The one local SparkSession builder for bench, scripts and tests:
+    ``local[cpus]``, as many shuffle partitions, UTC session time (timestamp
+    parity with the DuckDB oracles), AQE on, no UI, ERROR logs.  Overrides
+    name Spark confs without ``spark.``, dots as underscores:
+    ``driver_memory="12g"`` sets ``spark.driver.memory``."""
+    from pyspark.sql import SparkSession
+
+    conf = {"spark.sql.shuffle.partitions": str(cpus), "spark.sql.session.timeZone": "UTC",
+            "spark.sql.adaptive.enabled": "true", "spark.ui.enabled": "false",
+            **{"spark." + k.replace("_", "."): str(v) for k, v in overrides.items()}}
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app)
+    for key, value in conf.items():
+        builder = builder.config(key, value)
+    spark = builder.getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

@@ -259,15 +259,9 @@ def _resolve_df_cap(docs: DataFrame, cap: int | None | str,
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5, n: int = 3,
                         text_col: str = "text", id_col: str = "doc_id",
-                        cache_shingles: bool = False,
                         max_shingle_df: int | None | str = "auto",
                         oracle: bool = False) -> DataFrame:
     """Brute-force near-dup pairs with exact Jaccard >= threshold.
-
-    The shingle table feeds three plan branches (two self-join sides +
-    sizes). ``cache_shingles`` persists it so the explode runs once — the
-    right call when the upstream scan is expensive (cluster IO); recompute
-    pipelines better when cores outnumber the data (local bench).
 
     ``max_shingle_df`` is the 100 TB guard (SCALE.md): a shingle occurring
     in d documents contributes O(d²) rows to the intersection self-join,
@@ -284,8 +278,6 @@ def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.5, n: int = 3,
     sh = shingle_table(docs, text_col, id_col, n)
     if max_shingle_df is not None:
         sh = _drop_common_shingles(sh, max_shingle_df)
-    if cache_shingles:
-        sh = track(sh.persist())
     return _pair_jaccard(sh).filter(F.col("jaccard") >= threshold)
 
 
@@ -470,7 +462,6 @@ def minhash_lsh_pairs(
     bands: int = DEFAULT_BANDS,
     text_col: str = "text",
     id_col: str = "doc_id",
-    cache_shingles: bool = False,
 ) -> DataFrame:
     """MinHash-LSH candidates, then exact-Jaccard verification.
 
@@ -479,9 +470,6 @@ def minhash_lsh_pairs(
     at j=0.8), so at high thresholds the verified output equals the
     brute-force result with overwhelming probability while shuffling only
     (band, bucket) keys — the 100 TB shape.
-
-    ``cache_shingles`` is accepted for API compatibility; the per-doc
-    shingle-array table is always persisted (it feeds three plan branches).
     """
     rows = num_hashes // bands
     # per-doc distinct-shingle arrays, persisted: they feed the signature

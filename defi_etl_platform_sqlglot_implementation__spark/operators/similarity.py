@@ -541,70 +541,6 @@ def _pq_sq_chain(a_idx, b_idx, j: int, dsub: int) -> str:
     return " + ".join(terms)
 
 
-def pq_encode(
-    embeddings: DataFrame,
-    codebook: DataFrame,
-    m: int = 8,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim: int | None = None,
-) -> DataFrame:
-    """Product-quantization encode: split each vector into ``m`` contiguous
-    subvectors and store, per subspace, the id of the nearest codeword
-    (L2, ties to the lowest code id).
-
-    The codebook (one shared set of K codewords whose subspace slices act
-    as K codewords per subspace — a "shared" PQ codebook that keeps the
-    oracle twin expressible) is collapsed into a single array-of-structs
-    row and cross-joined in (a 1-row broadcast — a literal in disguise),
-    so the argmin per subspace is a ROW-LOCAL codegen fold: zero shuffle,
-    scan-speed encoding. That is the 100 TB shape — a production build
-    trains the codebook offline and broadcasts it exactly like this;
-    encoded codes are ints, 8 bytes/vector instead of 256, which is the
-    point of PQ at scale.
-    """
-    if dim is None:
-        # one probe job; callers that already know the dimensionality
-        # (ann_pq computed it for its own ADC chain) pass it in instead
-        # of paying a second scheduling round trip (r11 opt)
-        dim_terms = (embeddings.select(F.size(vec_col).alias("d"))
-                     .limit(1).collect())
-        dim = dim_terms[0]["d"] if dim_terms else m
-    dsub = dim // m
-
-    cb_row = codebook.select(
-        F.sort_array(F.collect_list(F.struct(
-            F.col(id_col).alias("cid"), F.col(vec_col).alias("cv")
-        ))).alias("cb")
-    )
-    # two selects, not 2m chained withColumns (r11 opt): every
-    # withColumn re-analyzes the whole accumulated plan, so the chain
-    # was quadratic in m over these already-large expression trees —
-    # pure driver time.  The _d{j} distance arrays stay named columns in
-    # their own projection so each transform chain still evaluates once
-    # per row (array_position + array_min reference them twice).
-    out = embeddings.crossJoin(F.broadcast(cb_row))
-    dists = []
-    for j in range(m):
-        chain = _pq_sq_chain(
-            lambda i: f"element_at({vec_col}, {i})",
-            lambda i: f"element_at(c.cv, {i})", j, dsub)
-        dists.append(F.expr(f"transform(cb, c -> {chain})").alias(f"_d{j}"))
-    out = out.select("*", *dists)
-    # first position achieving the min == lowest code id on ties
-    # (cb is sorted by code id); array_position is 1-based
-    codes = [
-        (F.expr(f"array_position(_d{j}, array_min(_d{j}))") - 1)
-        .cast("int").alias(f"code_{j}")
-        for j in range(m)
-    ]
-    # drop exactly the _d{j} temporaries — a prefix test would silently
-    # eat a caller-supplied column that happens to start with "_d"
-    temp = {f"_d{j}" for j in range(m)}
-    keep = [c for c in out.columns if c not in temp]
-    return out.select(*keep, *codes)
-
-
 def _cross_cosine_batches(q_rows, qlab_type, batches):
     """mapInArrow kernel for :func:`cross_cosine_scores` — the
     bit-identical twin of

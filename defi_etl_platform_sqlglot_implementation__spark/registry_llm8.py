@@ -13,7 +13,7 @@ a curation team actually reads:
   bpe_encode_segments.
 
 All four land INSIDE the r5 driver window (43 unproven entries lead the
-50 slots after `_ordered`'s new-bucket placement); locally oracle-exact
+50 slots after the window's new-bucket placement); locally oracle-exact
 at sf0.001/sf0.01/sf1.
 """
 

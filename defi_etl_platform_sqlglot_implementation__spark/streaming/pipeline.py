@@ -128,10 +128,18 @@ def dedup_stream(
     a bare ``dropDuplicates`` on a stream, which retains every key ever
     seen and OOMs a 100 TB/day pipeline.  Redeliveries later than the
     watermark are not deduplicated (they are late data; the watermark
-    already governs their fate in downstream aggregations)."""
+    already governs their fate in downstream aggregations).
+
+    A key the frame lacks at the top level is read from the envelope's
+    ``payload`` (where ``log_index`` lives) and dropped again after the
+    dedup; a frame that already carries every key is deduplicated as is."""
+    lifted = [k for k in keys if k not in events.columns]
+    if lifted:
+        events = events.withColumns({k: F.col(f"payload.{k}") for k in lifted})
     return (
         events.withWatermark(ts_col, delay)
         .dropDuplicatesWithinWatermark(list(keys))
+        .drop(*lifted)
     )
 
 

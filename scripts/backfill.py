@@ -57,17 +57,9 @@ def main() -> None:
     ap.add_argument("--cpus", default="8")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from defi_etl_platform_sqlglot_implementation__spark import session
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName("defi-spark-backfill")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(args.cpus, "defi-spark-backfill")
     counts = run_backfill(spark, args.input, args.output,
                           args.start_block, args.end_block, args.json)
     print(counts)

@@ -52,25 +52,15 @@ def _clique_edges(spark, n_edges: int):
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
+    from defi_etl_platform_sqlglot_implementation__spark import session
     from defi_etl_platform_sqlglot_implementation__spark.operators.dedup import (
         connected_components,
         minhash_lsh_pairs,
     )
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cc-crossover")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(cpus, "cc-crossover",
+                    driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     spark.range(1_000_000).selectExpr("sum(id)").collect()  # warm-up
 
     out = []

@@ -113,8 +113,6 @@ def _proc_tree_rss_kb() -> int:
     Python workers are children), via /proc — no psutil in the container.
     This is the quantity whose unbounded growth burned 25 of r5's 50
     driver oracle slots (host OOM), so the soak mode tracks it per gate."""
-    import os
-
     me = os.getpid()
     children: dict[int, list[int]] = {}
     rss: dict[int, int] = {}
@@ -163,20 +161,11 @@ def main() -> int:
     args = ap.parse_args()
 
     import __spark_entry__ as entry
-    from pyspark.sql import SparkSession
+    from defi_etl_platform_sqlglot_implementation__spark import session
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("check-oracle")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        # local mode = driver JVM does everything; the 1g default dies at
-        # the 10x stress scale (scripts/make_stress.py) mid-sweep
-        .config("spark.driver.memory", "12g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # local mode = driver JVM does everything; the 1g default dies at
+    # the 10x stress scale (scripts/make_stress.py) mid-sweep
+    spark = session(8, "check-oracle", driver_memory="12g")
 
     def fresh_con():
         # a FRESH connection per oracle: DuckDB working memory (hash

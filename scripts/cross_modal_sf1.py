@@ -143,21 +143,11 @@ def main() -> int:
     oracle_pd["joint_cluster"] = oracle_pd.joint_cluster.astype("int64")
 
     print("building spark session...", flush=True)
-    from pyspark.sql import SparkSession
+    from defi_etl_platform_sqlglot_implementation__spark import session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("cross-modal-sf1")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(cpus, "cross-modal-sf1",
+                    driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     import __spark_entry__ as entry
 
     t2 = time.time()

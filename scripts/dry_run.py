@@ -18,9 +18,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> int:
-    from pyspark.sql import SparkSession
-
-    from defi_etl_platform_sqlglot_implementation__spark import registry, registry_llm  # noqa: F401
+    from defi_etl_platform_sqlglot_implementation__spark import gates, registry, session
     from defi_etl_platform_sqlglot_implementation__spark.operators.risk import il_scan
     from defi_etl_platform_sqlglot_implementation__spark.plans.dialects import (
         all_dialects,
@@ -31,14 +29,8 @@ def main() -> int:
     )
     from defi_etl_platform_sqlglot_implementation__spark.plans.sqlutil import validate_sql
 
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("defi-spark-dry-run")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    gates.discover()
+    spark = session(4, "defi-spark-dry-run")
     failures = 0
 
     # 1. canonical SQL parses in the executing dialect

@@ -1,229 +1,62 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: the formatted physical plans of the headline
-queries at sf0.001, so plan quality (pushdown, pruning, broadcasts,
-codegen spans) is reviewable without running Spark.
+"""Capture .explain("formatted") for queries into plans/<tag>/.
 
-Usage: python scripts/dump_plans.py [--out PLANS.md]
+Usage: python scripts/dump_plans.py --tag r13 [--suffix before|after]
+                                    [--sf DIR] [--cpus N] [-q name ...]
+
+Dumps every ``bench.BENCH_QUERIES`` entry unless -q names the queries.
+Defaults to sf0.1: at sf0.001 single-partition inputs satisfy every
+required distribution trivially, so the exchanges a plan claim is about
+never appear.  Query construction for the CC/kmeans/BPE gates runs
+driver-side jobs, so dumping at sf0.1 costs real compute — pass -q to
+scope the run to the queries under study.
 """
 
 from __future__ import annotations
 
 import argparse
-import subprocess
+import io
+import os
 import sys
+from contextlib import redirect_stdout
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
-
-SHOWCASE = [
-    "pricing_summary",
-    "transfer_volume_hourly",
-    "shipping_priority",
-    "bi_nation_trade_volume",
-    "scd2_history",
-    "bm25_search",
-    "dedup_minhash_lsh",
-    "similarity_ann_ivf",
-    "ewma_user_value",
-    "rolling_var_cvar_partitioned",
-    # session-2 additions
-    "returned_item_customers",     # TakeOrderedAndProject top-k
-    "hybrid_search_rrf",           # two TakeOrdered rankers + outer-join fusion
-    "image_ahash_pairs",           # banded media-dedup candidate join
-    "semdedup_pairs",              # cluster-blocked semantic dedup
-    "fuzzy_customer_pairs",        # multi-pass blocked Levenshtein
-    "token_freq_cms",              # constant-size sketch aggregation
-    "substring_dup_spans",         # shingle shuffle + gaps-and-islands
-    "value_time_correlation",      # exact 128-bit moment sums
-    # round-4 additions
-    "swap_price_impact",           # long-cents aggregation (r4 rewrite)
-    "semdedup_pairs_trained",      # trained micro-k-means cluster blocking
-    "transpiled_rank_over",        # window OVER transpile gate
-    "eip55_checksum_addresses",    # post-agg batched-keccak casing
-    # round-4 session-2 additions
-    "gopher_quality_flags",        # row-local quality rule bundle
-    "dedup_incremental",           # batch-vs-corpus hash join + window
-    "knn_label_accuracy",          # broadcast eval set x train scan
-    "embedding_mean_pool",         # posexplode + (group, dim) hash agg
-    "bpe_encode_segments",         # trained fold chain + broadcast word join
-    "curation_pipeline_v2",        # composed quality->dedup->canonical chain
-    "transpiled_listagg",          # executed string-agg transpile gate
-    "reciprocal_trade_pairs",      # two-phase circular-flow detection
-    "schema_evolution_read",       # mergeSchema null-fill profile
-    # round-5 session-4 additions
-    "deterministic_downsample",    # row-local hash draw + broadcast rates
-    "dsir_importance_weights",     # two Laplace bigram LMs, Zipf-bounded joins
-    "winnowing_fingerprints",      # bounded xW window fan-out + struct-min agg
-    # round-7 wave-14 additions
-    "url_canonicalize",            # pure row-local string canonicalizer
-    "url_domain_dedup",            # canonical_url hash agg + domain-capped window
-    "dedup_minhash_normalized",    # normalize-then-LSH robust near-dup
-    "paragraph_dup_spans",         # packed-key argmin on paragraph hash
-    "paragraph_dedup_reassembly",  # kept-block reassembly via struct sort_array
-    "decontamination_incremental", # first-seen-batch MIN + cumulative spine
-    # round-8 wave-16 additions
-    "dup_span_granularity",        # per-n shingle shuffle + gaps-and-islands
-    "doremi_source_weights",       # bigram-LM joins + ordered sqrt-factor fold
-    "cross_modal_dedup",           # image+caption pair union (CC runs eagerly)
-    # round-8 wave-17 additions
-    "minhash_band_sweep",          # one md5 sig family, three band bucket-joins
-    "jaccard_threshold_sweep",     # integer re-threshold over one pair inventory
-    "ivf_balance_report",          # map-only assignment + k-row occupancy agg
-    # round-8 wave-18 additions
-    "nb_source_classifier",        # train-count equi-joins + broadcast class fan-out
-    "random_projection_recall",    # map-only JL projection + broadcast probe
-    "pair_alignment_spans",        # pair-reduced positional match + diagonal islands
-    # round-8 wave-19 additions
-    "cluster_prototype_pruning",   # map-only assign + per-cluster rank window
-    "span_corruption_plan",        # row-local mask explode + doc-partitioned islands
-    "doc_prefix_containment",      # first-4-token block join + row-local verify
-    # round-8 wave-20 additions
-    "quality_token_budget_cutoff", # score-spine cumsum, no global doc sort
-    "boilerplate_block_removal",   # block-hash prevalence join + per-doc agg
-    "kmeans_silhouette",           # map-only top-2 assign + row-local ratio
-    # round-8 wave-21 additions
-    "dedup_minhash_incremental",   # arrival-ordered groupBy over LSH pairs
-    "epoch_repetition_plan",       # |sources|-row arithmetic off one agg
-    "contrastive_pair_mining",     # shortlist-sized label joins off topk
-    # round-8 wave-22 additions
-    "ngram_novelty_profile",       # shingle-keyed train-membership join
-    "embedding_batch_drift",       # (batch, dim) moment agg + tiny self-join
-    # round-8 wave-23 additions
-    "repetition_tail_truncation",  # (doc, shingle) window + per-doc MIN
-    "label_balance_plan",          # |labels|-row agg + totals attach
-    "hash_shard_skew",             # 16-row hash agg + totals attach
-    # round-8 wave-24 additions
-    "bpe_vocab_pruning_curve",     # one train pass, k fold-chain variants
-    # round-8 wave-25 addition
-    "curation_pipeline_v3",        # quality->boiler->dup->budget funnel
-    # round-8 wave-26 addition
-    "pii_inventory",               # row-local regex/Luhn + per-source agg
-    # round-8 wave-27 additions
-    "ccnet_perplexity_buckets",    # bigram-LM joins + lang-partitioned ntile
-    "source_overlap_matrix",       # banded pair stream + source-pair aggs
-    "doc_length_histogram",        # row-local bin() bucket + one agg
-    # round-8 wave-28 additions
-    "event_debounce",              # grouped Arrow kernel, sequential state
-    "embedding_dim_correlation",   # vec-keyed self-join + (i,j) moment agg
-    "token_pmi_collocations",      # marginal joins + TakeOrdered top-k
-    # round-8 wave-29 additions
-    "mmr_diverse_selection",       # shortlist-local grouped greedy kernel
-    "source_unigram_kl",           # token-keyed join + broadcast totals
-    "quality_dup_quartiles",       # spine-decomposed ntile x dup-flag join
-    # round-8 wave-30 additions
-    "ivf_nprobe_recall_curve",     # one codebook, three map-only probes
-    "distinct_ngram_diversity",    # joinless three-branch explode + agg
-    # round-8 wave-31 additions
-    "zipf_fit_by_source",          # source-partitioned rank + moment agg
-    "ngram_entropy_curve",         # joinless gram agg + micro-nat entropy
-    "dedup_rate_by_batch",         # 8-row cumulative window over verdicts
-    # round-9 wave-32 additions
-    "dedup_token_savings",         # victim doc-sets x token frame (CC eager)
-    "doc_suffix_containment",      # last-4-token block join + tail verify
-    "quality_score_calibration",   # NB margin windows x quality/dup joins
-    "source_lang_datasheet",       # one base reduce + cached marginal cascade
-    "knn_label_accuracy_capped_eval",  # TakeOrdered cap x train scan
-    # round-9 wave-33 additions
-    "lsh_bucket_skew",             # one sig build, three band occupancy aggs
-    "kanonymity_report",           # row-local QI bucket + one hash agg
-    "retrieval_mrr_capped_eval",   # shared capped ranking + per-label MIN
-    # round-9 wave-34 additions
-    "dedup_keep_newest",           # CC labels + two cluster windows
-    "dsir_resample_draw",          # row-local gumbel keys + source rank
-    # round-9 wave-36 additions
-    "blocklist_screening_report",  # row-local lexicon match + source agg
-    "chunk_dedup_report",          # chunk-hash canon agg + source reduce
-    "ccnet_bucket_dup_matrix",     # shared ccnet buckets x dup doc-set
-    # round-9 wave-37 additions
-    "minhash_k_error_sweep",       # one 16-hash family, three K prefixes
-    "chunk_level_contamination",   # chunk-hash train-membership join
-    "normalization_impact_report", # row-local regex + one aggregate
-    "dp_laplace_counts",           # |sources|-row mechanism arithmetic
-    # round-9 wave-38 additions
-    "covariance_power_iteration",  # one moment shuffle + 64x64 folds
-    "quality_filter_venn",         # three flag frames + 8-row aggregate
-    # round-9 wave-39 additions
-    "feature_hash_collision_report",  # (tok, bucket) agg + 256-row reduce
-    # round-9 wave-40 additions
-    "source_js_divergence_matrix",    # pair-spine broadcast x token counts
-    "token_freq_drift",               # rank-spine batches + movers window
-    # round-9 wave-41 additions
-    "bloom_fpr_curve",                # broadcast bit-set semi-joins x 3
-    "embedding_projection_outliers",  # 64-row direction x vector scan
-    # round-10 wave-42 additions
-    "maximal_repeat_inventory",       # span-hash-keyed repeat classes
-    "span_dedup_token_savings",       # coverage explode + 2 hash aggs
-    # round-10 wave-43 additions
-    "knn_graph_edges",                # capped broadcast pairing + per-src rank
-    "graph_ann_recall_curve",         # 3 beam chains over one persisted graph
-    # round-10 epilogue (wave 45, artifact set completed in round 11)
-    "secret_entropy_sweep",           # one entropy chain x threshold explode
-    "ecc_by_threshold",               # 3 BFS chains over exact pair sets
-    # round-11 wave-46 additions
-    "graph_ann_two_stage",            # IVF candidates -> top-k, zero shuffles
-    "repeat_class_cut_plan",          # class-hash keeper window + 2 hash aggs
-    # round-11 wave-47 additions
-    "graph_two_stage_nprobe_curve",   # 3 nested probe chains, one node frame
-    "span_dedup_sample_effect",       # full + sampled shingle passes
-    # round-11 wave-48 additions
-    "dedup_keep_best_quality",        # row-local score + cluster rank windows
-    "keep_policy_matrix",             # one rank frame, 3 pairwise folds
-    # round-11 wave-49 additions
-    "pq_rerank_recall_curve",         # one ADC pass, prefix-sliced depths
-    "contamination_ngram_curve",      # one tokenize pass, per-n bcast probe
-    # round-11 wave-50 additions
-    "gopher_strictness_curve",        # one metric frame, 3 level folds
-    "ivf_codebook_size_curve",        # map-only assigns + cell folds
-]
-
-SF = "/root/testdata/sf0.001"
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--out", default=str(Path(__file__).resolve().parent.parent
-                                         / "PLANS.md"))
+    ap.add_argument("--tag", required=True, help="output dir plans/<tag>/")
+    ap.add_argument("--suffix", default="before")
+    ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
+    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("-q", "--queries", nargs="*", default=None)
     args = ap.parse_args()
+    # `-q` with zero names is a scoping mistake, not a request for the
+    # full (expensive at sf0.1) bench sweep
+    if args.queries is not None and not args.queries:
+        ap.error("-q given without query names; omit -q to dump the bench set")
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.ui.enabled", "false")
-        .appName("dump-plans")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    import bench
     import __spark_entry__ as entry
+    from defi_etl_platform_sqlglot_implementation__spark import session
 
+    spark = session(args.cpus, "plan-dump")
     queries = entry.queries()
-    try:
-        sha = subprocess.run(["git", "rev-parse", "--short", "HEAD"],
-                             capture_output=True, text=True,
-                             cwd=Path(__file__).resolve().parent.parent
-                             ).stdout.strip()
-    except Exception:
-        sha = "unknown"
-
-    lines = [
-        "# PLANS — formatted physical plans of the headline queries",
-        "",
-        f"Generated by `scripts/dump_plans.py` at commit `{sha}` "
-        f"(sf0.001, local[4]). Regenerate after plan-affecting changes;",
-        "the plan-shape assertions live in tests/test_plan_lint.py — this",
-        "file is the human-readable companion, not the gate.",
-        "",
-    ]
-    for name in SHOWCASE:
-        df = queries[name](spark, SF)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted")
-        lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]
-    Path(args.out).write_text("\n".join(lines))
-    print(f"wrote {args.out} ({len(SHOWCASE)} plans)")
-    spark.stop()
+    out_dir = ROOT / "plans" / args.tag
+    out_dir.mkdir(parents=True, exist_ok=True)
+    for name in args.queries or bench.BENCH_QUERIES:
+        try:
+            df = queries[name](spark, args.sf)
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain("formatted")
+            text = buf.getvalue()
+        except Exception as exc:  # noqa: BLE001 — record the failure
+            text = f"PLAN CAPTURE FAILED: {exc!r}\n"
+        (out_dir / f"{name}_{args.suffix}.txt").write_text(text)
+        print(f"wrote {name}_{args.suffix}.txt ({len(text)} bytes)")
 
 
 if __name__ == "__main__":

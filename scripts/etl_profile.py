@@ -30,22 +30,13 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from defi_etl_platform_sqlglot_implementation__spark import session
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     runs = int(os.environ.get("SPARK_GRAFT_ETL_RUNS", "3"))
     n_msgs = int(os.environ.get("SPARK_GRAFT_ETL_MSGS", "100000"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("etl-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(cpus, "etl-profile",
+                    driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     from defi_etl_platform_sqlglot_implementation__spark.pipeline import run_batch

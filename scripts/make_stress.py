@@ -29,10 +29,15 @@ from __future__ import annotations
 
 import argparse
 import shutil
+import sys
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+
+from defi_etl_platform_sqlglot_implementation__spark import session  # noqa: E402
 
 OFF = 10_000_000
 
@@ -69,13 +74,7 @@ def main() -> None:
     ap.add_argument("--copies", type=int, default=10)
     args = ap.parse_args()
 
-    spark = (
-        SparkSession.builder.master("local[16]")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "16")
-        .appName("make-stress")
-        .getOrCreate()
-    )
+    spark = session(16, "make-stress")
     out_dir = Path(args.out)
     if out_dir.exists():
         shutil.rmtree(out_dir)

@@ -29,20 +29,10 @@ def main() -> None:
     args = ap.parse_args()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
+    from defi_etl_platform_sqlglot_implementation__spark import session
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("r11-profile")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session(cpus, "r11-profile",
+                    driver_memory=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
 
     import __spark_entry__ as entry
     from pyspark.sql import functions as F

@@ -12,6 +12,7 @@ import json
 import pytest
 from pyspark.sql import SparkSession
 
+from defi_etl_platform_sqlglot_implementation__spark import session
 from defi_etl_platform_sqlglot_implementation__spark.functions.keccak import (
     ERC20_TRANSFER_TOPIC,
     UNISWAP_V2_SWAP_TOPIC,
@@ -23,15 +24,8 @@ FIXED_TS = 1_700_000_000  # deterministic epoch seconds
 
 @pytest.fixture(scope="session")
 def spark():
-    spark = (
-        SparkSession.builder.master("local[4]")
-        .appName("defi-spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    # plan-lint tests depend on local[4], 4 shuffle partitions and AQE
+    spark = session(4, "defi-spark-tests")
     yield spark
     spark.stop()
 

@@ -1,0 +1,96 @@
+"""The derived driver contract: gate discovery, the green ledger, the
+verification window and the one SparkSession factory."""
+
+from __future__ import annotations
+
+import os
+import subprocess
+import sys
+from pathlib import Path
+
+import __spark_entry__ as entry
+from defi_etl_platform_sqlglot_implementation__spark import gates, registry
+
+ROOT = Path(__file__).resolve().parent.parent
+Q, O = registry.QUERIES, registry.ORACLES
+
+
+def test_discovery_imports_every_registry_module():
+    on_disk = sorted(p.stem for p in gates.PKG_DIR.glob("registry*.py"))
+    assert gates.discover() == on_disk
+    assert all(f"{gates.PACKAGE}.{m}" in sys.modules for m in on_disk)
+
+
+def test_ledger_names_resolve_in_the_registry():
+    ledger = gates.load_ledger()
+    assert ledger and set(ledger) <= set(Q)
+
+
+def test_oracles_follow_query_order():
+    q, o = entry.queries(), entry.oracle_sql()
+    assert q == Q and o == O  # every gate, same callables and SQL
+    assert list(o) == [n for n in q if n in o]
+
+
+def test_window_is_computed_once_per_import():
+    for _ in range(3):
+        entry.queries()
+        entry.oracle_sql()
+    assert entry._window.cache_info().misses == 1
+
+
+def test_window_is_the_same_under_any_hash_seed():
+    code = "import __spark_entry__ as e; print(' '.join(e.queries()))"
+    runs = [subprocess.run([sys.executable, "-c", code], cwd=ROOT, capture_output=True,
+                           text=True, check=True, env={**os.environ, "PYTHONHASHSEED": seed}).stdout
+            for seed in ("1", "2")]
+    assert runs == [" ".join(entry.queries()) + "\n"] * 2
+
+
+def _all_green():
+    """Per-gate sources and fingerprints, and a ledger holding every oracle
+    gate green under its current fingerprint, in mixed rounds."""
+    src = gates.sources(Q)
+    fps = {n: gates.fingerprint(O.get(n), s) for n, s in src.items()}
+    ledger = {n: {"fingerprint": fps[n], "round": 1 + i % 12} for i, n in enumerate(O)}
+    return src, fps, ledger, gates.order(Q, O, fps, ledger)
+
+
+def test_editing_an_operator_moves_exactly_the_gates_that_reach_it():
+    src, fps, ledger, before = _all_green()
+    target = f"{gates.PACKAGE}.operators.dedup.minhash_lsh_pairs"
+    movers = {n for n, s in src.items() if target in s}
+    edited = {**fps, **{n: gates.fingerprint(O[n], {**src[n], target: "def minhash_lsh_pairs(): ...\n"})
+                        for n in movers}}
+    after = gates.order(Q, O, edited, ledger)
+    # reached through a function-local import, and through other operators
+    assert {"dedup_minhash_lsh", "keep_policy_matrix", "dedup_clusters"} <= movers
+    assert "transfer_volume_hourly" not in movers
+    assert set(after[:len(movers)]) == movers
+    assert [n for n in after if n not in movers] == [n for n in before if n not in movers]
+
+
+def test_editing_one_oracle_moves_only_that_gate():
+    src, fps, ledger, before = _all_green()
+    name = before[100]
+    after = gates.order(Q, O, {**fps, name: gates.fingerprint(O[name] + " ", src[name])}, ledger)
+    assert after == [name] + [n for n in before if n != name]
+
+
+def test_window_ranks_changed_then_oldest_green_then_rows_only():
+    names = ["new", "old", "fresh", "edited", "rows_only"]
+    oracles = dict.fromkeys(names[:4], "SELECT 1")
+    ledger = {"old": {"fingerprint": "fp", "round": 3}, "fresh": {"fingerprint": "fp", "round": 9},
+              "edited": {"fingerprint": "stale", "round": 1}}
+    assert gates.order(dict.fromkeys(names), oracles, dict.fromkeys(names, "fp"), ledger) == [
+        "edited", "new", "old", "fresh", "rows_only"]
+
+
+def test_one_session_builder_outside_the_frozen_benchmark():
+    needle, hits = "SparkSession" + ".builder", {}
+    for path in ROOT.rglob("*.py"):
+        rel = path.relative_to(ROOT)
+        if rel.parts[0] != "perfbench" and not any(p.startswith(".") for p in rel.parts):
+            if n := path.read_text(errors="replace").count(needle):
+                hits[str(rel)] = n
+    assert hits == {f"{gates.PACKAGE}/__init__.py": 1}

@@ -230,3 +230,37 @@ class TestStreamDedup:
         keys = [(r.event_type, r.block_number) for r in got]
         assert len(keys) == len(set(keys)), "redelivery survived dedup"
         assert len(keys) == 30  # 20 originals + 10 genuinely new
+
+    def test_default_keys_read_log_index_from_the_envelope(self, spark, tmp_path):
+        """Two logs of one block that differ only by log_index both survive
+        the default keys; a redelivery of either does not."""
+        from defi_etl_platform_sqlglot_implementation__spark.streaming.pipeline import (
+            dedup_stream,
+        )
+
+        logs = [make_transfer_message(block_number=19_000_000, block_timestamp=BASE_TS,
+                                      log_index=i) for i in (0, 1)]
+        _write_messages(tmp_path, logs + logs[:1])
+        events = stream_events(spark.readStream.text(str(tmp_path / "input")))
+        q = (dedup_stream(events).writeStream.format("memory").queryName("dedup_default_keys")
+             .option("checkpointLocation", str(tmp_path / "ckpt")).start())
+        try:
+            q.processAllAvailable()
+            got = spark.sql("SELECT * FROM dedup_default_keys").collect()
+        finally:
+            q.stop()
+        assert sorted(r.payload.log_index for r in got) == [0, 1]
+        assert "log_index" not in got[0].asDict()  # the lifted key is dropped again
+
+    def test_lifted_keys_keep_the_plan(self, spark):
+        from defi_etl_platform_sqlglot_implementation__spark.streaming.pipeline import (
+            dedup_stream,
+        )
+
+        events = spark.createDataFrame(
+            [("token_transfer", 1, 0)], "event_type string, block_number long, log_index long",
+        ).withColumn("event_time", F.current_timestamp())
+        want = events.withWatermark("event_time", "1 hour").dropDuplicatesWithinWatermark(
+            ["event_type", "block_number", "log_index"])
+        plan = lambda df: df._jdf.queryExecution().analyzed().toString()  # noqa: E731
+        assert plan(dedup_stream(events)) == plan(want)

@@ -17,6 +17,8 @@ from itertools import chain
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.bronze import local_frame
+
 TOKEN_STANDARDS = {
     "0xa9059cbb": "ERC20.transfer",
     "0x23b872dd": "ERC20.transferFrom",
@@ -36,6 +38,4 @@ def token_standards_col(selector: Column) -> Column:
 
 
 def token_standards_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        [(k, v) for k, v in TOKEN_STANDARDS.items()], ["fn_selector", "fn_name"]
-    )
+    return local_frame(spark, TOKEN_STANDARDS.items(), "fn_selector string, fn_name string")

@@ -196,3 +196,14 @@ def order(queries: Mapping, oracles: Mapping[str, str], fps: Mapping[str, str],
         return (1, row["round"], name) if is_current(row, fps[name]) else (0, 0, name)
 
     return sorted(queries, key=rank)
+
+
+def changed() -> list[str]:
+    """Oracle gates changed since their green row (or never green), in
+    window order: the gates a change must re-verify."""
+    from . import registry
+
+    discover()
+    q, o = registry.QUERIES, registry.ORACLES
+    fps, ledger = fingerprints(q, o), load_ledger()
+    return [n for n in order(q, o, fps, ledger) if n in o and not is_current(ledger.get(n), fps[n])]

@@ -31,6 +31,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..sources.bronze import local_frame
+
 
 def var_cvar(
     returns: DataFrame,
@@ -160,7 +162,7 @@ def stress_test(
     """Hypothetical-shock P&L table (risk_models.py:124-143)."""
     if shock_pcts is None:
         shock_pcts = [-0.10, -0.20, -0.30, -0.50, -0.80]
-    shocks = spark.createDataFrame([(float(s),) for s in shock_pcts], ["shock"])
+    shocks = local_frame(spark, [(float(s),) for s in shock_pcts], "shock double")
     return shocks.select(
         (F.col("shock") * 100.0).alias("shock_pct"),
         (F.col("shock") * position_size).alias("pnl_usd"),
@@ -184,7 +186,7 @@ def il_scan(
     price_current, il_pct, lp_value, hold_value, loss_usd."""
     if ratios is None:
         ratios = [0.25, 0.5, 0.75, 1.0, 1.5, 2.0, 3.0, 5.0, 10.0]
-    grid = spark.createDataFrame([(float(x),) for x in ratios], ["price_ratio"])
+    grid = local_frame(spark, [(float(x),) for x in ratios], "price_ratio double")
     r = F.col("price_ratio")
     lp_relative, il = il_components(r)
     hold_value = F.lit(initial_usd) * (1.0 + r) / 2.0

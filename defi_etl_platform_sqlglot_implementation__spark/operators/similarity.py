@@ -26,6 +26,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.bronze import local_frame
+
+# (centroid_id, embedding): the frame both k-means trainers return
+_CENTROIDS = "centroid_id long, embedding array<double>"
+
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
     "0D, (acc, v) -> acc + v)"
@@ -848,9 +853,7 @@ def kmeans_cosine(
 
     spark = embeddings.sparkSession
     for _ in range(max_iters):
-        cdf = spark.createDataFrame(
-            [(cid, vec) for cid, vec in cents], ["centroid_id", "ce"]
-        )
+        cdf = local_frame(spark, cents, "centroid_id long, ce array<double>")
         assigned = assign_clusters(
             embeddings, cdf.select(F.col("centroid_id").alias(id_col),
                                    F.col("ce").alias(vec_col)),
@@ -872,9 +875,7 @@ def kmeans_cosine(
             break
         cents = sorted(new_cents)
 
-    return spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents], ["centroid_id", "embedding"]
-    )
+    return local_frame(spark, cents, _CENTROIDS)
 
 
 def kmeans_micro(
@@ -986,7 +987,7 @@ def _kmeans_micro_train(
         )
     # centroids are materialized driver-side; the caller's finally
     # releases the training cache
-    return spark.createDataFrame(cents, ["centroid_id", "embedding"])
+    return local_frame(spark, cents, _CENTROIDS)
 
 
 

@@ -29,6 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType, StringType, TimestampNTZType
 
+from .sources.bronze import local_frame
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
@@ -679,8 +681,8 @@ def var_cvar_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stress_test_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_session(spark)
-    shocks = spark.createDataFrame(
-        [(-0.10,), (-0.20,), (-0.30,), (-0.50,), (-0.80,)], "shock: double"
+    shocks = local_frame(
+        spark, [(-0.10,), (-0.20,), (-0.30,), (-0.50,), (-0.80,)], "shock double"
     )
     return shocks.select(
         (F.col("shock") * 1e2).alias("shock_pct"),

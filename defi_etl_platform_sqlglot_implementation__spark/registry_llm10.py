@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from .registry import register, t
 from .registry_llm import _dot_chain  # noqa: F401 — shared float policy ref
 from .registry_llm6 import _NTOK_DUCK, _NTOK_SPARK
+from .sources.bronze import local_frame
 
 _BIN_TOKENS = 16     # length-bin width (tokens)
 _BATCH_DOCS = 8      # docs per micro-batch within a (source, bin)
@@ -163,7 +164,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 Window.orderBy(F.desc("c"), F.asc("tok")))))
     tot = wc.agg(F.sum("c").cast("long").alias("total_instances"),
                  F.count("*").cast("long").alias("total_types"))
-    ks = spark.createDataFrame([(k,) for k in _CURVE_KS], "k long")
+    ks = local_frame(spark, [(k,) for k in _CURVE_KS], "k long")
     return (
         ks.crossJoin(F.broadcast(tot))
         .join(F.broadcast(head), F.col("rn") <= F.col("k"), "left")

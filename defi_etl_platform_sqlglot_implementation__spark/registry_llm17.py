@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from .registry import register, t
 from .registry_llm import _SHINGLES_CTE
 from .registry_llm6 import _MH_K
+from .sources.bronze import local_frame
 
 # the three (bands, rows_per_band) configs; bands * rows == _MH_K for
 # all of them so one signature family serves the whole sweep, and each
@@ -254,8 +255,8 @@ def jaccard_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = ngram_jaccard_pairs(docs, threshold=0.5, oracle=True).select(
         "d1", "d2", "inter",
         (F.col("n1") + F.col("n2") - F.col("inter")).alias("un"))
-    thr = spark.createDataFrame([(t,) for t in _THRESHOLDS_BP],
-                                "threshold_bp long")
+    thr = local_frame(spark, [(t,) for t in _THRESHOLDS_BP],
+                      "threshold_bp long")
     hits = F.broadcast(thr).join(
         pairs, F.lit(10000) * F.col("inter")
         >= F.col("threshold_bp") * F.col("un"))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from .operators.materialize import scoped_persist
 from .registry import register, t
+from .sources.bronze import local_frame
 
 # =========================================================================
 # Gopher-style repetition / degeneracy profile (row-local)
@@ -871,7 +872,7 @@ def token_freq_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("cnt").cast("long").alias("total"))
     )
 
-    probes = spark.createDataFrame([(x,) for x in _CMS_PROBES], "term string")
+    probes = local_frame(spark, [(x,) for x in _CMS_PROBES], "term string")
     p = probes.withColumn(
         "base_h", F.conv(F.substring(F.md5("term"), 1, 8), 16, 10).cast("long")
     )

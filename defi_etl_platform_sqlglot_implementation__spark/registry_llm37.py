@@ -68,6 +68,7 @@ from .registry import register, t
 from .registry_llm import _SHINGLES_CTE  # noqa: F401 — device parity docs
 from .registry_llm27 import _CCNET_RANKED_CTES
 from .registry_llm35 import _bl_sql_list, _BLOCKLIST
+from .sources.bronze import local_frame
 
 _DIM = 64
 _PI_STEPS = 3
@@ -264,8 +265,8 @@ def _pi_fold(spark: SparkSession, el: DataFrame) -> list[dict[int, int]]:
     v = {i: _V_SCALE for i in range(_DIM)}   # v0 = 1000 * ones
     vs: list[dict[int, int]] = []
     for _ in range(_PI_STEPS):
-        vdf = spark.createDataFrame(
-            [(j, str(val)) for j, val in sorted(v.items())],
+        vdf = local_frame(
+            spark, [(j, str(val)) for j, val in sorted(v.items())],
             "j int, v_str string").select(
                 "j", F.col("v_str").cast("decimal(38,0)").alias("v"))
         w_rows = (cfull.join(F.broadcast(vdf), "j")
@@ -307,8 +308,8 @@ def covariance_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         align = _align_cos2_bp(vs[-1])
         rows += [(pop, i, int(vs[0][i]), int(vs[1][i]), int(vs[2][i]),
                   align) for i in sorted(vs[0])]
-    return spark.createDataFrame(
-        rows, "population string, dim long, v1 long, v2 long, v3 long, "
+    return local_frame(
+        spark, rows, "population string, dim long, v1 long, v2 long, v3 long, "
               "align_cos2_bp long")
 
 

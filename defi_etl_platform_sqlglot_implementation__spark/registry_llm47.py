@@ -46,6 +46,7 @@ from pyspark.sql import functions as F
 
 from .registry import register, t
 from .registry_llm import _CC_REACH_CTE, _SHINGLES_CTE
+from .sources.bronze import local_frame
 
 # lab CTE shared by both gates: every doc with its cluster label and
 # the three policy-ranking signals, all exact integers
@@ -187,11 +188,14 @@ def keep_policy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     wc = Window.partitionBy("cluster_id")
     # ONE window pass computes every pair's "differs" flag plus the
     # cluster size (all four ride the same partitioning — one Exchange,
-    # one Window node), and ONE aggregate folds all seven distinct
-    # metrics the three output rows share (n_multi and the per-policy
-    # token sums are pair-independent; only n_differ varies).  The r11
-    # build shape re-shuffled and re-aggregated the persisted rank frame
-    # once per pair — 3 Exchanges + 3 aggs for 1 row each (guide §2.4).
+    # one Window node), and ONE aggregate folds all seven metrics the
+    # three output rows share (n_multi and the per-policy token sums are
+    # pair-independent; only n_differ varies).  The r11 build shape
+    # re-shuffled and re-aggregated the persisted rank frame once per
+    # pair — 3 Exchanges + 3 aggs for 1 row each (guide §2.4).
+    # Cluster counts count each cluster's one rn_long = 1 row (its flags
+    # are constant over the cluster): COUNT(DISTINCT cluster_id) would
+    # add an Expand and a second exchange keyed on cluster_id.
     flags = {
         (a, b): F.max(
             F.when((F.col(_RN[a]) == 1) & (F.col(_RN[b]) != 1), 1)
@@ -201,15 +205,15 @@ def keep_policy_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann = rk.select(
         "cluster_id", "n_words", *_RN.values(), *flags.values(),
         F.count("*").over(wc).alias("csz")).filter(F.col("csz") > 1)
+    head = F.col("rn_long") == 1
     folded = ann.agg(
-        F.countDistinct("cluster_id").cast("long").alias("n_multi"),
-        *[F.countDistinct(
-            F.when(F.col(f"diff_{a[0]}{b[0]}") == 1, F.col("cluster_id")))
-          .cast("long").alias(f"nd_{a[0]}{b[0]}") for a, b in _POLICY_PAIRS],
+        F.count(F.when(head, 1)).alias("n_multi"),
+        *[F.count(F.when(head & (F.col(f"diff_{a[0]}{b[0]}") == 1), 1))
+          .alias(f"nd_{a[0]}{b[0]}") for a, b in _POLICY_PAIRS],
         *[F.sum(F.when(F.col(rn) == 1, F.col("n_words")).otherwise(0))
           .cast("long").alias(f"tok_{p}") for p, rn in _RN.items()])
-    pair_rows = spark.createDataFrame(
-        list(_POLICY_PAIRS), "policy_a string, policy_b string")
+    pair_rows = local_frame(
+        spark, _POLICY_PAIRS, "policy_a string, policy_b string")
     pick = lambda col_of: F.coalesce(*[  # noqa: E731 — 3-way column pick
         F.when((F.col("policy_a") == a) & (F.col("policy_b") == b),
                F.col(col_of(a, b))) for a, b in _POLICY_PAIRS])

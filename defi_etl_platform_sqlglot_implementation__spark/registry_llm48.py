@@ -52,6 +52,7 @@ from pyspark.sql import functions as F
 
 from .registry import ORACLES, register, t
 from .registry_llm import _dot_chain, _pq_oracle_sql
+from .sources.bronze import local_frame
 
 _RERANK_DEPTHS = (10, 20, 40)
 _RERANK_K = 10  # final list size AND truth size (top-10 vs top-10)
@@ -122,8 +123,8 @@ def pq_rerank_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth = scoped_persist(
         cosine_topk(e, q, k=_RERANK_K).select("query_id", "neighbor_id"))
 
-    depths = spark.createDataFrame(
-        [(d,) for d in _RERANK_DEPTHS], "depth int")
+    depths = local_frame(
+        spark, [(d,) for d in _RERANK_DEPTHS], "depth int")
     cand = scoped_persist(
         pq.join(F.broadcast(depths), F.col("rank") <= F.col("depth"))
         .select("depth", "query_id", "neighbor_id"))

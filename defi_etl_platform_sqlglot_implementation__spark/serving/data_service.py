@@ -22,9 +22,8 @@ from ..functions.keccak import ERC20_TRANSFER_TOPIC
 from ..operators.mev import mev_scores
 from ..operators.risk import il_scan, rolling_var_cvar, stress_test, var_cvar
 from ..operators.transfers import decode_transfers
-from ..operators.tx_features import engineer_transactions
 from ..pipeline import lift_transactions
-from ..sources.bronze import parse_raw_events
+from ..sources.bronze import local_frame, parse_raw_events
 
 TOKEN_CONTRACTS = [
     "0xA0b86991c6218b36c1d19D4a2e9Eb0cE3606eB48",  # USDC
@@ -110,7 +109,7 @@ class DataService:
         self.spark = spark
 
     def _events(self, messages: list[str]):
-        raw = self.spark.createDataFrame([(m,) for m in messages], ["value"])
+        raw = local_frame(self.spark, [(m,) for m in messages], "value string")
         return parse_raw_events(raw)
 
     # -- /api/var (reference data_service.py:118-170) -----------------------
@@ -132,8 +131,9 @@ class DataService:
             for i in range(n)
         ]
 
-        returns_df = self.spark.createDataFrame(
-            [(i, float(r)) for i, r in enumerate(daily_returns)], ["i", "r"]
+        returns_df = local_frame(
+            self.spark, [(i, float(r)) for i, r in enumerate(daily_returns)],
+            "i long, r double",
         )
         rolling = rolling_var_cvar(
             returns_df, idx_col="i", window=window,
@@ -199,23 +199,27 @@ class DataService:
 
     def get_mev_data(self) -> dict:
         events = self._events(make_synthetic_tx_messages(n=120))
-        tx = engineer_transactions(lift_transactions(events))
+        # only the two columns mev_scores reads: engineer_transactions'
+        # gas_price_gwei, without its rolling gas_p90 kernel, which
+        # Catalyst cannot prune
+        tx = lift_transactions(events).select(
+            "block_number",
+            (F.col("gas_price").cast("double") / 1e9).alias("gas_price_gwei"),
+        )
 
-        block_nums = [
-            r["block_number"]
-            for r in tx.select("block_number").distinct().orderBy("block_number").collect()
-        ]
+        # the bounded results are sorted on the driver: a Spark orderBy
+        # adds a range-partition sampling job per collect
+        block_nums = sorted(
+            r["block_number"] for r in tx.select("block_number").distinct().collect()
+        )
         rng = np.random.default_rng(7)
         swap_rows = []
         for b in block_nums:
             for _ in range(int(rng.integers(1, 5))):
                 swap_rows.append((int(b), str(rng.choice(["0xpool1", "0xpool2", "0xpool3"]))))
-        swaps = self.spark.createDataFrame(swap_rows, ["block_number", "pool"])
+        swaps = local_frame(self.spark, swap_rows, "block_number long, pool string")
 
-        scores = mev_scores(
-            tx.select("block_number", "gas_price_gwei"), swaps
-        ).orderBy("block_number").collect()
-        scores = scores[-48:]
+        scores = sorted(mev_scores(tx, swaps).collect(), key=lambda r: r["block_number"])[-48:]
         if not scores:
             return {"blocks": [], "scores": [], "colors": [], "summary": {}}
 
@@ -250,33 +254,34 @@ class DataService:
             "hour", F.date_trunc("hour", "block_timestamp")
         )
         df.cache()
+        try:
+            hourly = (
+                df.groupBy("hour", "standard")
+                .agg(F.sum("amount").alias("volume"), F.count("tx_hash").alias("count"))
+                .collect()
+            )
+            top = (
+                df.filter(F.col("standard") == "ERC-20")
+                .groupBy("contract")
+                .agg(F.sum("amount").alias("volume"))
+                .orderBy(F.desc("volume"))
+                .limit(4)
+                .collect()
+            )
+            summary_row = df.agg(
+                F.count("*").alias("total"),
+                F.sum((F.col("standard") == "ERC-20").cast("long")).alias("erc20"),
+                F.sum((F.col("standard") == "ERC-721").cast("long")).alias("erc721"),
+                F.countDistinct("contract").alias("contracts"),
+                F.sum(F.when(F.col("standard") == "ERC-20", F.col("amount")).otherwise(0.0)).alias("vol"),
+            ).collect()[0]
+        finally:
+            # a failed collect must not leave the frame pinned
+            df.unpersist()
 
-        hourly = (
-            df.groupBy("hour", "standard")
-            .agg(F.sum("amount").alias("volume"), F.count("tx_hash").alias("count"))
-            .collect()
-        )
         erc20 = {r["hour"]: r for r in hourly if r["standard"] == "ERC-20"}
         erc721 = {r["hour"]: r for r in hourly if r["standard"] == "ERC-721"}
         all_hours = sorted({r["hour"] for r in hourly})
-
-        top = (
-            df.filter(F.col("standard") == "ERC-20")
-            .groupBy("contract")
-            .agg(F.sum("amount").alias("volume"))
-            .orderBy(F.desc("volume"))
-            .limit(4)
-            .collect()
-        )
-
-        summary_row = df.agg(
-            F.count("*").alias("total"),
-            F.sum((F.col("standard") == "ERC-20").cast("long")).alias("erc20"),
-            F.sum((F.col("standard") == "ERC-721").cast("long")).alias("erc721"),
-            F.countDistinct("contract").alias("contracts"),
-            F.sum(F.when(F.col("standard") == "ERC-20", F.col("amount")).otherwise(0.0)).alias("vol"),
-        ).collect()[0]
-        df.unpersist()
 
         return {
             "labels": [h.strftime("%H:%M") for h in all_hours],

@@ -7,6 +7,7 @@ endpoints are also exposed as a plain WSGI app so any server can mount it.
 from __future__ import annotations
 
 import json
+import logging
 
 from pyspark.sql import SparkSession
 
@@ -19,9 +20,12 @@ ROUTES = {
     "/api/transfers": "get_transfer_data",
 }
 
+log = logging.getLogger(__name__)
+
 
 def wsgi_app(spark: SparkSession):
-    """Minimal WSGI callable serving the four endpoints as JSON."""
+    """Minimal WSGI callable serving the four endpoints as JSON; a route
+    that raises answers 500 with ``{"error": "<Type>: <msg>", "route"}``."""
     service = DataService(spark)
 
     def app(environ, start_response):
@@ -29,10 +33,16 @@ def wsgi_app(spark: SparkSession):
         if path not in ROUTES:
             start_response("404 Not Found", [("Content-Type", "application/json")])
             return [b'{"error": "not found"}']
-        payload = getattr(service, ROUTES[path])()
+        try:
+            payload = getattr(service, ROUTES[path])()
+            status = "200 OK"
+        except Exception as exc:
+            log.exception("route %s failed", path)
+            payload = {"error": f"{type(exc).__name__}: {exc}", "route": path}
+            status = "500 Internal Server Error"
         body = json.dumps(payload).encode("utf-8")
-        start_response("200 OK", [("Content-Type", "application/json"),
-                                  ("Content-Length", str(len(body)))])
+        start_response(status, [("Content-Type", "application/json"),
+                                ("Content-Length", str(len(body)))])
         return [body]
 
     return app

@@ -1,3 +1,3 @@
-from .bronze import load_table, load_tables, parse_raw_events, to_event_json
+from .bronze import load_table, load_tables, local_frame, parse_raw_events, to_event_json
 
-__all__ = ["load_table", "load_tables", "parse_raw_events", "to_event_json"]
+__all__ = ["load_table", "load_tables", "local_frame", "parse_raw_events", "to_event_json"]

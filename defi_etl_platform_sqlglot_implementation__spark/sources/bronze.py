@@ -5,12 +5,19 @@ The reference's Kafka consumer path is ``bytes -> json.loads -> dict``
 ``dataclass -> json.dumps -> bytes`` (kafka_producer.py:51-52). In Spark
 those are ``from_json``/``to_json`` over the explicit envelope schema —
 executed columnar, JVM-side (SURVEY.md §2.1 S4/S5).
+
+Driver-local rows (fixture grids, driver-loop state such as k-means
+centroids) enter plans through :func:`local_frame` only.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StringType, StructField, StructType
 
 from ..schemas import ENVELOPE
@@ -23,6 +30,28 @@ TPCH_TABLES = (
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: StructType | str
+) -> DataFrame:
+    """Driver-local tuples -> a frame whose plan leaf is a JVM relation.
+
+    ``schema`` is a StructType or a DDL string; nothing is inferred.  The
+    rows become one ``pyarrow.Table`` of that schema, which Spark turns
+    into a ``LocalRelation`` (an RDD of Arrow batches above
+    ``spark.sql.execution.arrow.localRelationThreshold``).  Unlike
+    ``createDataFrame(<list>)``, whose scan is a PythonRDD, executing the
+    plan starts no Python worker, and Catalyst can fold projections over
+    it and size it for broadcast.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow, strict=True)], schema=arrow)
+    return spark.createDataFrame(table, schema)
 
 
 def load_tables(

@@ -192,7 +192,7 @@ def ingest_block_range(spark, client: JsonRpcClient, start: int, end: int,
     body (kafka_producer.py:129-148: fetch → process → publish), with
     the Kafka hop replaced by the bronze parser that a streaming
     deployment reaches via the Kafka source."""
-    from .bronze import parse_raw_events
+    from .bronze import local_frame, parse_raw_events
 
     msgs: list[str] = []
     for n in range(start, end + 1):
@@ -207,5 +207,5 @@ def ingest_block_range(spark, client: JsonRpcClient, start: int, end: int,
                 continue
         msgs.extend(block_to_events(block, receipts, chain_id, network,
                                     ingested_at=ingested_at))
-    raw = spark.createDataFrame([(m,) for m in msgs], "value string")
+    raw = local_frame(spark, [(m,) for m in msgs], "value string")
     return parse_raw_events(raw)

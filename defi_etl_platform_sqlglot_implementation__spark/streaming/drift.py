@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..registry_llm22 import _DRIFT_TAU
+from ..sources.bronze import local_frame
 
 
 def _batch_moments(batch: DataFrame) -> DataFrame:
@@ -96,7 +97,7 @@ class DriftState:
                 drifted = int(abs(s_c * n_p - s_p * n_c)
                               > self.tau * n_c * n_p)
                 rows.append((dim, n_c, s_c, n_p, s_p, drifted))
-        out = spark.createDataFrame(rows, _OUT_SCHEMA)
+        out = local_frame(spark, rows, _OUT_SCHEMA)
         self._prev = cur
         return out
 

@@ -7,7 +7,11 @@ row count, sorted column names, and an order-insensitive value comparison
 (exact after normalization; reports approx-only matches separately so
 float-parity risks surface before the real driver runs).
 
-Usage: python scripts/check_oracle.py [--sf /root/testdata/sf0.001] [-q name ...]
+Usage: python scripts/check_oracle.py [--sf /root/testdata/sf0.001]
+           [-q name ... | --changed | --sweep N]
+
+``--changed`` runs the gates ``scripts/ledger.py changed`` lists: those whose
+fingerprint moved since their last green round, or that were never green.
 """
 
 from __future__ import annotations
@@ -146,11 +150,14 @@ def _mem_available_kb() -> int:
     return -1
 
 
-def main() -> int:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("-q", "--queries", nargs="*", default=None)
-    ap.add_argument("--sweep", type=int, default=None, metavar="N",
+    pick = ap.add_mutually_exclusive_group()
+    pick.add_argument("-q", "--queries", nargs="*", default=None)
+    pick.add_argument("--changed", action="store_true",
+                      help="run the gates `scripts/ledger.py changed` lists")
+    pick.add_argument("--sweep", type=int, default=None, metavar="N",
                     help="soak mode: run the FIRST N entries of "
                          "__spark_entry__.queries() — the exact order the "
                          "driver's correctness window uses — in ONE "
@@ -158,7 +165,22 @@ def main() -> int:
                          "MemAvailable after every gate.  Reproduces (or "
                          "proves fixed) the r5 sweep OOM before the real "
                          "driver runs.")
-    args = ap.parse_args()
+    return ap.parse_args(argv)
+
+
+def gate_names(args: argparse.Namespace, queries: list[str]) -> list[str]:
+    """The gates to run, given ``queries`` in window order."""
+    if args.changed:
+        from defi_etl_platform_sqlglot_implementation__spark import gates
+
+        return gates.changed()
+    if args.sweep is not None:
+        return queries[: args.sweep]
+    return args.queries or queries
+
+
+def main() -> int:
+    args = parse_args()
 
     import __spark_entry__ as entry
     from defi_etl_platform_sqlglot_implementation__spark import session
@@ -193,10 +215,7 @@ def main() -> int:
 
     queries = entry.queries()
     oracles = entry.oracle_sql()
-    if args.sweep is not None:
-        names = list(queries)[: args.sweep]
-    else:
-        names = args.queries or list(queries)
+    names = gate_names(args, list(queries))
     n_pass = n_fail = n_approx = n_rowsonly = 0
     rss0 = _proc_tree_rss_kb() if args.sweep is not None else 0
     rss_peak = rss_end = rss0

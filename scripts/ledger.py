@@ -4,7 +4,7 @@
 ``record CORRECTNESS_rNN.json [...]`` stamps each hash-exact gate with its
 current fingerprint and round NN; run it on the commit the driver verified.
 ``changed`` prints the oracle gates changed since their green row (or never
-green), in window order: ``scripts/check_oracle.py -q $(... changed)``.
+green), in window order; ``scripts/check_oracle.py --changed`` runs them.
 """
 
 from __future__ import annotations
@@ -27,14 +27,13 @@ def main() -> None:
     sub.add_parser("changed")
     args = ap.parse_args()
 
+    if args.cmd == "changed":
+        for name in gates.changed():
+            print(name)
+        return
     gates.discover()
     fps = gates.fingerprints(registry.QUERIES, registry.ORACLES)
     ledger = gates.load_ledger()
-    if args.cmd == "changed":
-        for name in gates.order(registry.QUERIES, registry.ORACLES, fps, ledger):
-            if name in registry.ORACLES and not gates.is_current(ledger.get(name), fps[name]):
-                print(name)
-        return
     for path in args.files:
         m = re.search(r"_r(\d+)\.json$", path.name) or ap.error(f"{path}: no _rNN round in the name")
         rnd = int(m.group(1))

@@ -3,6 +3,7 @@ verification window and the one SparkSession factory."""
 
 from __future__ import annotations
 
+import ast
 import os
 import subprocess
 import sys
@@ -94,3 +95,27 @@ def test_one_session_builder_outside_the_frozen_benchmark():
             if n := path.read_text(errors="replace").count(needle):
                 hits[str(rel)] = n
     assert hits == {f"{gates.PACKAGE}/__init__.py": 1}
+
+
+def test_driver_local_rows_enter_plans_only_through_local_frame():
+    bronze = gates.PKG_DIR / "sources" / "bronze.py"
+    fn = next(n for n in ast.parse(bronze.read_text()).body
+              if isinstance(n, ast.FunctionDef) and n.name == "local_frame")
+    needle, hits = "createDataFrame" + "(", []
+    for path in sorted(gates.PKG_DIR.rglob("*.py")):
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            if needle in line and not (path == bronze and fn.lineno <= i <= fn.end_lineno):
+                hits.append(f"{path.relative_to(ROOT)}:{i}")
+    assert hits == []
+
+
+def test_check_oracle_changed_runs_the_ledger_changed_gates():
+    sys.path.insert(0, str(ROOT / "scripts"))
+    try:
+        import check_oracle
+    finally:
+        sys.path.remove(str(ROOT / "scripts"))
+    listed = subprocess.run([sys.executable, "scripts/ledger.py", "changed"], cwd=ROOT,
+                            capture_output=True, text=True, check=True).stdout.split()
+    names = check_oracle.gate_names(check_oracle.parse_args(["--changed"]), list(entry.queries()))
+    assert names == listed

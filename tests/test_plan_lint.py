@@ -963,15 +963,17 @@ def test_keep_quality_windows_are_cluster_partitioned(spark):
 
 
 def test_keep_policy_matrix_folds_one_rank_frame(spark):
-    plan = _executed(spark, "keep_policy_matrix")
     # r11 opt: ONE window pass computes every pair's differs flag and the
     # cluster size, and ONE aggregate folds all seven metrics — exactly
     # one cluster_id exchange in the whole plan (the build shape
     # re-shuffled a persisted rank frame once per policy pair, so the
-    # persist and its InMemoryTableScan are gone along with the 3 passes)
-    assert "CartesianProduct" not in plan
-    assert "BatchEvalPython" not in plan
-    assert plan.count("hashpartitioning(cluster_id") == 1
+    # persist and its InMemoryTableScan are gone along with the 3 passes).
+    # Built twice: the plan must not depend on the session's history.
+    for _ in range(2):
+        plan = _executed(spark, "keep_policy_matrix")
+        assert "CartesianProduct" not in plan
+        assert "BatchEvalPython" not in plan
+        assert plan.count("hashpartitioning(cluster_id") == 1
 
 
 def test_pq_rerank_curve_slices_one_adc_ranking(spark):

@@ -2,9 +2,23 @@
 (reference api/data_service.py + server.py)."""
 
 import json
+from pathlib import Path
 
+import pytest
+from pyspark.sql import functions as F
+
+from defi_etl_platform_sqlglot_implementation__spark.serving import data_service
 from defi_etl_platform_sqlglot_implementation__spark.serving.data_service import DataService
 from defi_etl_platform_sqlglot_implementation__spark.serving.server import wsgi_app
+
+# Route payloads captured at commit 63e24c1, before driver-local rows moved
+# from createDataFrame(<list>) to local_frame; /api/transfers keeps only the
+# fields that do not follow the wall clock.
+GOLDEN = json.loads(Path(__file__).with_name("serving_golden.json").read_text())
+
+
+def _json(payload):
+    return json.loads(json.dumps(payload))
 
 
 class TestVarEndpoint:
@@ -55,6 +69,28 @@ class TestTransfersEndpoint:
         assert vols == sorted(vols, reverse=True)
 
 
+class TestTransfersCache:
+    def test_failed_collect_leaves_nothing_pinned(self, spark, monkeypatch):
+        real = data_service.decode_transfers
+        monkeypatch.setattr(data_service, "decode_transfers", lambda events: real(events).withColumn(
+            "amount", F.raise_error(F.lit("injected")).cast("double")))
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        with pytest.raises(Exception, match="injected"):
+            DataService(spark).get_transfer_data()
+        assert set(jsc.getPersistentRDDs().keys()) == before
+
+
+class TestGoldenPayloads:
+    def test_payloads_equal_the_captured_values(self, spark):
+        svc = DataService(spark)
+        assert _json(svc.get_var_data()) == GOLDEN["var"]
+        assert _json(svc.get_il_data()) == GOLDEN["il"]
+        assert _json(svc.get_mev_data()) == GOLDEN["mev"]
+        transfers = _json(svc.get_transfer_data())
+        assert {k: transfers[k] for k in ("summary", "top_contracts")} == GOLDEN["transfers"]
+
+
 class TestWsgiEdge:
     def test_routes_serve_json(self, spark):
         app = wsgi_app(spark)
@@ -70,3 +106,25 @@ class TestWsgiEdge:
 
         body = b"".join(app({"PATH_INFO": "/nope"}, start_response))
         assert captured["status"] == "404 Not Found"
+
+    def test_failing_route_answers_json_500(self, spark, monkeypatch):
+        def boom(self):
+            raise ValueError("boom")
+
+        monkeypatch.setattr(DataService, "get_mev_data", boom)
+        app = wsgi_app(spark)
+        captured = {}
+
+        def start_response(status, headers):
+            captured.update(status=status, headers=dict(headers))
+
+        body = b"".join(app({"PATH_INFO": "/api/mev"}, start_response))
+        assert captured["status"] == "500 Internal Server Error"
+        assert captured["headers"]["Content-Type"] == "application/json"
+        assert captured["headers"]["Content-Length"] == str(len(body))
+        assert json.loads(body) == {"error": "ValueError: boom", "route": "/api/mev"}
+
+        # the other routes keep their status and body
+        body = b"".join(app({"PATH_INFO": "/api/il"}, start_response))
+        assert captured["status"] == "200 OK"
+        assert body == json.dumps(DataService(spark).get_il_data()).encode("utf-8")

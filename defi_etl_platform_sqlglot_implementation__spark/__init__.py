@@ -6,8 +6,8 @@ Design stance (SURVEY.md §7.1): pure DataFrame -> DataFrame transform
 functions + Spark SQL views. Catalyst/Tungsten provide the optimizer and
 physical execution the reference (a single-process pandas pipeline) lacks.
 The reference's sqlglot write-once-run-anywhere goal is satisfied by
-construction — Spark SQL is the executing dialect; a thin optional
-sqlglot-backed transpile helper is kept in ``plans.sqlutil``.
+construction — Spark SQL is the executing dialect; ``plans.transpile``
+(the rule transpiler in ``plans.transpiler``) emits the other six.
 
 Layout
 ------
@@ -17,7 +17,7 @@ Layout
 - ``operators``  : transfers / swaps / tx features / block agg / MEV / risk
                    + scale extensions (dedup, similarity, text stats,
                    multimodal)
-- ``plans``      : canonical SQL registry, validation, optional transpile
+- ``plans``      : canonical SQL registry, validation, rule transpiler
 - ``streaming``  : Structured Streaming variants of the batch transforms
 - ``serving``    : the four chart-endpoint computations (JSON shapes)
 - ``pipeline``   : run_batch() orchestrator mirroring the reference's

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .materialize import track
+
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the corpus — the only corpus-wide reduction."""
@@ -98,16 +100,17 @@ def train_bpe(
     on [a, a, a] with merge (a, a), the first pair merges and the third
     symbol survives alone.
 
-    Contract: the returned frame is PERSISTED (it is re-hit by any
-    downstream aggregation, e.g. vocab extraction); the caller owns the
-    ``unpersist()`` (bpe_vocab in registry_llm does).  Symbols are
-    Unicode code points: Spark 4's ``split(word, '')`` splits surrogate
-    pairs as single code points, matching the pure-Python reference
-    ``list(w)`` — pinned by test_bpe's non-BMP test so an engine
-    regression to UTF-16-unit splitting would be caught."""
+    The returned frame is persisted (it is re-hit by any downstream
+    aggregation, e.g. vocab extraction) and tracked in the current
+    materialization scope, which releases it; every working frame joins
+    that scope before a job fills it, so a failed fill pins nothing.
+    Symbols are Unicode code points: Spark 4's ``split(word, '')`` splits
+    surrogate pairs as single code points, matching the pure-Python
+    reference ``list(w)`` — pinned by test_bpe's non-BMP test so an
+    engine regression to UTF-16-unit splitting would be caught."""
     seqs = _initial_sequences(word_frequencies(docs, text_col))
     # the word table is small (vocab-cardinality) and hit n_merges times
-    seqs = seqs.persist()
+    seqs = track(seqs.persist())
     seqs.count()
     merges: list[tuple[str, str, int]] = []
     # release schedule (r11 opt): each round's pair-count collect is the
@@ -117,43 +120,30 @@ def train_bpe(
     # deferring the parent's unpersist until after the next round's
     # collect halves the training loop's job count (2 -> 1 per merge,
     # plus one final fill job).  The merge sequence itself is untouched.
+    # The in-loop release bounds a long training loop to two live rounds.
     prev: DataFrame | None = None
-    # try/finally (ADVICE r11 #3): a mid-training failure must not pin
-    # cache blocks — release the deferred parent, and on failure the
-    # orphaned working frame too (on success its unpersist stays with
-    # the caller, per the contract above)
-    ok = False
-    try:
-        for _ in range(n_merges):
-            top = (
-                _pair_counts(seqs)
-                .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
-                .limit(1)
-                .collect()
-            )
-            if prev is not None:
-                prev.unpersist()
-                prev = None
-            if not top:
-                break
-            a, b, cnt = top[0].a, top[0].b, int(top[0].n)
-            merges.append((a, b, cnt))
-            nxt = seqs.withColumn("seq", F.expr(_merge_expr(a, b))).persist()
-            prev = seqs
-            seqs = nxt
+    for _ in range(n_merges):
+        top = (
+            _pair_counts(seqs)
+            .orderBy(F.desc("n"), F.asc("a"), F.asc("b"))
+            .limit(1)
+            .collect()
+        )
         if prev is not None:
-            # the last merge's frame was never read in-loop: fill its cache
-            # from the still-cached parent, then release the parent (the
-            # caller owns the returned frame's unpersist, as before)
-            seqs.count()
             prev.unpersist()
             prev = None
-        ok = True
-    finally:
-        if not ok:
-            if prev is not None:
-                prev.unpersist()
-            seqs.unpersist()
+        if not top:
+            break
+        a, b, cnt = top[0].a, top[0].b, int(top[0].n)
+        merges.append((a, b, cnt))
+        nxt = track(seqs.withColumn("seq", F.expr(_merge_expr(a, b))).persist())
+        prev = seqs
+        seqs = nxt
+    if prev is not None:
+        # the last merge's frame was never read in-loop: fill its cache
+        # from the still-cached parent, then release the parent
+        seqs.count()
+        prev.unpersist()
     return merges, seqs
 
 

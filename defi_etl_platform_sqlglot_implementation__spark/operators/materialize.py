@@ -1,4 +1,4 @@
-"""Query-scoped materialization helpers.
+"""Query-scoped materialization: the one owner of persisted-frame lifetime.
 
 Why this module exists (VERDICT r5, "What's wrong" #1): the driver's
 correctness sweep runs ~50 registry queries back-to-back in ONE
@@ -10,16 +10,32 @@ session.  Fifty gates in, host memory was gone and the remaining DuckDB
 oracles — subprocesses allocating a few KB — died with
 OutOfMemoryException, burning 25 of 50 verification slots.
 
-Two devices fix it without giving up the reuse the materializations buy:
+Ownership rule: every persisted frame in the package joins the current
+scope BEFORE any job fills it, and only this module unpersists it.  A
+fill that raises therefore leaves nothing pinned past the next scope
+boundary.  Callers never ``cache()`` and never ``unpersist()``; the only
+exceptions are loop-local releases that bound a long driver loop
+(``train_bpe``'s previous round, ``kmeans_micro``'s caller-aware
+training persist).
 
-``scoped_persist(df)``
-    ``persist()`` + eager materialize, TRACKED.  The registry's
-    ``register`` decorator calls :func:`release_scoped` on entry to every
-    top-level driver-contract query, so a gate's intermediates live
-    exactly until the next gate starts — by which point the driver has
-    collected the previous result.  Unlike ``localCheckpoint`` the
-    lineage survives, so even a stale consumer that re-collects an old
-    result after release merely recomputes; nothing can break.
+``scoped_persist(df)`` / ``scoped_persist_all(dfs)``
+    Register, then persist DISK_ONLY and fill eagerly (one ``count()``
+    job per frame).  The registry's ``register`` decorator opens a
+    :func:`query_scope` per top-level driver-contract query, so a gate's
+    intermediates live exactly until the next gate starts — by which
+    point the driver has collected the previous result.  Unlike
+    ``localCheckpoint`` the lineage survives, so even a stale consumer
+    that re-collects an old result after release merely recomputes;
+    nothing can break.
+
+``track(df)``
+    Register a frame the caller persists itself, lazily or per loop
+    round; call it on the frame returned by ``persist()``, before any
+    action.
+
+``material_scope()``
+    The same boundary for library consumers outside the registry (tests,
+    notebooks): it also releases on exit.
 
 ``disk_ckpt(df)``
     ``localCheckpoint(eager=True, storageLevel=DISK_ONLY)`` for the
@@ -31,113 +47,69 @@ Two devices fix it without giving up the reuse the materializations buy:
     the same reasoning holds: executor-local disk is the spill tier,
     heap is the scarce resource.
 
-Both are no-ops conceptually: callers get back a DataFrame with the same
+All are no-ops conceptually: callers get back a DataFrame with the same
 contents; only block lifetime and placement change.
 """
 
 from __future__ import annotations
 
+import contextlib
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 # DataFrames persisted for the CURRENT top-level driver-contract query.
-# Module-level on purpose: the registry decorator (registry.py) is the
-# single writer of the scope boundary, and the driver harness is
-# single-threaded per session (as are bench.py / scripts/check_oracle.py).
-# Threading contract: _DEPTH has a SINGLE writer (the registry
-# decorator, main thread only — concurrent registry queries from
-# multiple Python threads remain unsupported), while _SCOPED is mutated
-# ONLY via list.append/extend/pop, which are atomic under CPython —
-# the two composite gates (cross_modal_dedup, dedup_token_savings)
+# Module-level on purpose, not a ContextVar: dedup_token_savings fills
+# frames from ThreadPoolExecutor workers, which do not inherit the
+# caller's context, so their frames would escape a ContextVar scope.
+# Threading contract: _DEPTH has a SINGLE writer (the scope boundary,
+# main thread only — concurrent registry queries from multiple Python
+# threads remain unsupported), while _SCOPED is mutated ONLY via
+# list.append/pop, which are atomic under CPython — the composite gates
 # rely on exactly that when they overlap independent fill actions from
 # a 2-thread driver pool (guide §2.6).  Any change that replaces
 # _SCOPED with a richer structure or adds non-atomic read-modify-write
-# must add a lock for those callers.  Library consumers calling the
-# tracked operators OUTSIDE the registry (tests, notebooks) should wrap
-# their usage in :func:`material_scope` so refs do not accumulate until
-# an unrelated registry call happens to drain them.
+# must add a lock for those callers.
 _SCOPED: list[DataFrame] = []
 
 # re-entrancy depth: registered queries may call shared helpers that are
 # themselves registered; only the OUTERMOST entry releases the scope.
 _DEPTH: int = 0
 
-
-def _default_level() -> StorageLevel:
-    """Resolve the scoped-persist StorageLevel at CALL time from
-    ``$SPARK_GRAFT_PERSIST_LEVEL`` (default DISK_ONLY).  Values are
-    level-independent by construction — the knob exists so bench/one-shot
-    runs can trade the long-session RSS discipline (DISK_ONLY — see the
-    module docstring) for MEMORY_AND_DISK reread speed, and so the r6→r7
-    bench-regression A/B (VERDICT r6 #2) is a measurement, not a guess."""
-    import os
-
-    name = os.environ.get("SPARK_GRAFT_PERSIST_LEVEL", "DISK_ONLY")
-    return getattr(StorageLevel, name)
+# A JVM never hands heap high-water back to the OS, so in a long shared
+# session every MEMORY_* materialization permanently raises process RSS
+# even after release — the sweep-killer observed in round 5.  These
+# frames are KB–MB sized and re-read within one query; the OS page cache
+# serves them at near-RAM speed without growing the heap.
+_LEVEL = StorageLevel.DISK_ONLY
 
 
-def scoped_persist(df: DataFrame, eager: bool = True,
-                   level: StorageLevel | None = None
-                   ) -> DataFrame:
-    """Persist ``df`` for the duration of the current registry query.
-
-    Eager by default (one ``count()`` job) so multi-branch consumers —
-    both sides of a self-join, a count and a max over the same frame —
-    are guaranteed to read materialized blocks instead of racing to
-    populate them.  Released by :func:`release_scoped` at the next
-    top-level registry call; until then it behaves exactly like
-    ``persist()``.
-
-    DISK_ONLY by default: a JVM never hands heap high-water back to the
-    OS, so in a long shared session every MEMORY_* materialization
-    permanently raises process RSS even after release — the sweep-killer
-    observed in round 5.  These frames are KB–MB sized and re-read
-    within one query; the OS page cache serves them at near-RAM speed
-    without growing the heap.  Callers with a genuinely hot, large,
-    repeatedly-scanned frame can pass MEMORY_AND_DISK explicitly.
-    """
-    if level is None:
-        level = _default_level()
-    out = df.persist(level)
-    if eager:
-        out.count()
-    _SCOPED.append(out)
-    return out
+def scoped_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the duration of the current scope and fill it
+    eagerly, so multi-branch consumers — both sides of a self-join, a
+    count and a max over the same frame — read materialized blocks
+    instead of racing to populate them.  The one-frame case of
+    :func:`scoped_persist_all`."""
+    return scoped_persist_all([df])[0]
 
 
-def scoped_persist_all(dfs: list[DataFrame],
-                       level: StorageLevel | None = None,
-                       max_workers: int = 2) -> list[DataFrame]:
-    """Eagerly scoped-persist INDEPENDENT frames with their fill jobs
-    overlapped from a small driver thread pool (guide §2.6: actions are
-    only sequential because driver code calls them sequentially; a
-    later job's tasks back-fill executors freed by the earlier job's
-    stragglers).
+def scoped_persist_all(dfs: list[DataFrame]) -> list[DataFrame]:
+    """Scoped-persist INDEPENDENT frames, registering all of them before
+    any fill runs, then filling them with their jobs overlapped from a
+    2-thread driver pool (guide §2.6: actions are only sequential
+    because driver code calls them sequentially; a later job's tasks
+    back-fill executors freed by the earlier job's stragglers).
 
-    Correctness is unchanged — each fill is the same deterministic
-    count() job :func:`scoped_persist` runs, just submitted
-    concurrently; use ONLY for frames with no shared UNFILLED persisted
-    subtree (two fills racing to populate the same cache block would
-    each compute it).  2-3 in flight is plenty (the guide's rule).
-
-    Frames are registered in _SCOPED BEFORE the fill jobs run, so a
-    fill that throws (executor OOM, interrupted job) still leaves every
-    persisted frame releasable at the next scope boundary instead of
-    pinned for the session lifetime — the same failure-path ownership
-    train_bpe's try/finally guarantees.  Early registration is safe:
-    release of an unfilled persisted frame merely recomputes from
-    lineage (see :func:`release_scoped`).
-    """
-    from concurrent.futures import ThreadPoolExecutor
-
-    if level is None:
-        level = _default_level()
-    out = [df.persist(level) for df in dfs]
-    _SCOPED.extend(out)
+    Use ONLY for frames with no shared UNFILLED persisted subtree (two
+    fills racing to populate the same cache block would each compute
+    it).  Registration first means a fill that throws (executor OOM,
+    interrupted job, a raising expression) still leaves every persisted
+    frame releasable at the next scope boundary; release of an unfilled
+    frame merely recomputes from lineage."""
+    out = [track(df.persist(_LEVEL)) for df in dfs]
     if len(out) > 1:
-        # a plain driver thread pool suffices for concurrent actions
-        # (guide §2.6); FIFO scheduling gives the back-fill behaviour
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        with ThreadPoolExecutor(max_workers=2) as pool:
             list(pool.map(lambda df: df.count(), out))
     elif out:
         out[0].count()
@@ -145,10 +117,9 @@ def scoped_persist_all(dfs: list[DataFrame],
 
 
 def track(df: DataFrame) -> DataFrame:
-    """Register an ALREADY-persisted frame for release at the next
-    top-level registry call — for operator-library call sites that manage
-    their own persist() level/laziness but previously had no release
-    path (the minhash banding tables, shingle caches)."""
+    """Register an already-persisted, not yet filled frame for release at
+    the next scope boundary — for call sites that choose their own
+    laziness (the minhash banding tables, BPE's per-round frames)."""
     _SCOPED.append(df)
     return df
 
@@ -169,32 +140,35 @@ def release_scoped() -> int:
     return n
 
 
-def query_scope(fn):
-    """Decorator piece used by ``registry.register``: on entry to an
-    OUTERMOST registered query, release the previous query's scoped
-    frames.  Inner registered calls (composed gates) keep the current
-    scope alive."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(*args, **kwargs):
-        global _DEPTH
-        if _DEPTH == 0:
+@contextlib.contextmanager
+def _scope(release_on_exit: bool):
+    """The one scope boundary: the OUTERMOST entry releases the previous
+    scope's frames; inner entries (composed gates, nested blocks) keep
+    the current scope alive."""
+    global _DEPTH
+    if _DEPTH == 0:
+        release_scoped()
+    _DEPTH += 1
+    try:
+        yield
+    finally:
+        _DEPTH -= 1
+        if release_on_exit and _DEPTH == 0:
             release_scoped()
-        _DEPTH += 1
-        try:
-            return fn(*args, **kwargs)
-        finally:
-            _DEPTH -= 1
 
-    return wrapped
+
+def query_scope(fn):
+    """Decorator piece used by ``registry.register``: a registered query's
+    frames live until the next top-level query starts, by which point
+    the driver has collected its result."""
+    return _scope(release_on_exit=False)(fn)
 
 
 def material_scope():
     """Context manager bounding scoped-persist lifetimes for NON-registry
     consumers (tests, notebooks, library callers of e.g.
     ``ngram_jaccard_pairs`` / ``minhash_lsh_pairs``, whose internal
-    ``track``/``scoped_persist`` calls otherwise append to the module
+    ``track``/``scoped_persist`` calls otherwise stay in the module
     scope until the next top-level registry query drains it)::
 
         with material_scope():
@@ -202,27 +176,8 @@ def material_scope():
 
     On exit every frame scoped inside the block is unpersisted.  Safe
     even if a lazy DataFrame escapes the block: persisted frames keep
-    their lineage, so a late action recomputes instead of failing.
-    Nests with registry queries the same way composed gates do (inner
-    scopes keep the outer scope alive via ``_DEPTH``).  Single-threaded,
-    like the rest of this module.
-    """
-    import contextlib
-
-    @contextlib.contextmanager
-    def _scope():
-        global _DEPTH
-        if _DEPTH == 0:
-            release_scoped()
-        _DEPTH += 1
-        try:
-            yield
-        finally:
-            _DEPTH -= 1
-            if _DEPTH == 0:
-                release_scoped()
-
-    return _scope()
+    their lineage, so a late action recomputes instead of failing."""
+    return _scope(release_on_exit=True)
 
 
 def disk_ckpt(df: DataFrame) -> DataFrame:

@@ -6,7 +6,8 @@ from .queries import (
     build_block_range_query,
     run_canonical,
 )
-from .sqlutil import analyze_sql, get_all_dialects, transpile, validate_sql
+from .sqlutil import analyze_sql, validate_sql
+from .transpiler import DIALECTS, transpile
 
 __all__ = [
     "CANONICAL_QUERIES",
@@ -16,7 +17,7 @@ __all__ = [
     "build_block_range_query",
     "run_canonical",
     "analyze_sql",
-    "get_all_dialects",
-    "transpile",
     "validate_sql",
+    "DIALECTS",
+    "transpile",
 ]

@@ -1,28 +1,14 @@
-"""SQL validation / dialect utilities (SURVEY.md §2.11 Q1, Q3, Q4).
+"""SQL validation utilities (SURVEY.md §2.11 Q3, Q4).
 
 ``validate_sql`` uses Spark's own parser — the analog of the reference's
 ``sqlglot.parse`` error collection (etl_pipeline.py:353-361), but against
-the engine that will actually execute the text.
-
-``transpile`` keeps the reference's write-once-emit-anywhere contract as an
-*optional* helper: sqlglot is not a dependency of the engine (Spark SQL is
-the executing dialect); if the library is importable we delegate, otherwise
-only the identity (spark -> spark) transpile works.
+the engine that will actually execute the text.  Emitting SQL for another
+dialect is the rule transpiler's job (``plans.transpiler.transpile``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
-
-try:  # optional, deliberately not required (import-gated per environment)
-    import sqlglot  # type: ignore
-
-    _HAS_SQLGLOT = True
-except ImportError:  # pragma: no cover
-    sqlglot = None
-    _HAS_SQLGLOT = False
-
-DIALECTS = ["postgres", "bigquery", "snowflake", "duckdb", "spark", "trino", "mysql"]
 
 
 def validate_sql(spark: SparkSession, sql: str) -> list[str]:
@@ -43,24 +29,3 @@ def analyze_sql(spark: SparkSession, sql: str) -> list[str]:
         return []
     except Exception as exc:
         return [str(exc).splitlines()[0] if str(exc) else repr(exc)]
-
-
-def transpile(sql: str, target_dialect: str, read: str = "spark") -> str:
-    """Emit warehouse SQL for an external engine. Uses sqlglot when
-    installed (full-language coverage); otherwise falls back to the
-    built-in rule transpiler (plans.transpiler), which covers the
-    canonical analytic subset and raises UnsupportedConstructError on
-    anything outside it rather than emitting silently wrong SQL."""
-    if target_dialect == read:
-        return sql
-    if _HAS_SQLGLOT:
-        return "\n".join(
-            sqlglot.transpile(sql, read=read, write=target_dialect, pretty=True)
-        )
-    from .transpiler import transpile as _rule_transpile
-
-    return _rule_transpile(sql, target_dialect, source=read)
-
-
-def get_all_dialects() -> list[str]:
-    return list(DIALECTS)

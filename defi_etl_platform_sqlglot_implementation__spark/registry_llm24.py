@@ -81,9 +81,8 @@ def bpe_vocab_pruning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.bpe import train_bpe
 
     docs = t(spark, sf_dir, "documents")
-    merges, seqs = train_bpe(
+    merges, _ = train_bpe(
         docs.filter(F.col("doc_id") % 5 != 0), n_merges=_N_MERGES)
-    seqs.unpersist()
     from .operators.bpe import encode_words
     from .operators.materialize import scoped_persist
 

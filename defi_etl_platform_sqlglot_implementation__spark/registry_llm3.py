@@ -1110,14 +1110,11 @@ def bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     _, seqs = train_bpe(docs, n_merges=6)
-    out = vocab_from_sequences(seqs)
-    # materialize (vocab-cardinality blocks) before unpersisting the
-    # training frame it reads from; scoped_persist releases the blocks
-    # when the NEXT driver-contract query starts, so a 50-gate sweep in
-    # one session never accumulates them (r5's OOM)
-    out = scoped_persist(out)
-    seqs.unpersist()
-    return out
+    # vocab-cardinality blocks; scoped_persist releases them, and the
+    # training frame train_bpe tracked, when the NEXT driver-contract
+    # query starts, so a 50-gate sweep in one session never accumulates
+    # them (r5's OOM)
+    return scoped_persist(vocab_from_sequences(seqs))
 
 
 # =========================================================================

@@ -291,9 +291,8 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.bpe import encode_words, train_bpe
 
     docs = t(spark, sf_dir, "documents")
-    merges, seqs = train_bpe(
+    merges, _ = train_bpe(
         docs.filter(F.col("doc_id") % 5 != 0), n_merges=6)
-    seqs.unpersist()
     words = (docs.select(F.explode(F.split("text", " ")).alias("word"))
              .filter(F.col("word") != "").distinct())
     enc = encode_words(words, merges).select(

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import time
+from collections import Counter, defaultdict
 
 import numpy as np
 from pyspark.sql import SparkSession
@@ -250,56 +251,54 @@ class DataService:
 
     def get_transfer_data(self) -> dict:
         events = self._events(make_synthetic_transfer_messages(n=200))
-        df = decode_transfers(events).withColumn(
-            "hour", F.date_trunc("hour", "block_timestamp")
+        # one bounded aggregate (hours x standards x contracts: at most
+        # 24 x 2 x 6 rows) carries the whole payload; the hourly series,
+        # the top contracts and the summary are folded on the driver.
+        # Catalyst prunes the columns it does not read, so the plan
+        # evaluates only the amount decode.
+        groups = (
+            decode_transfers(events)
+            .groupBy(F.date_trunc("hour", "block_timestamp").alias("hour"),
+                     "standard", "contract")
+            .agg(F.sum("amount").alias("volume"),
+                 F.count("tx_hash").alias("count"),
+                 F.count("*").alias("rows"))
+            .collect()
         )
-        df.cache()
-        try:
-            hourly = (
-                df.groupBy("hour", "standard")
-                .agg(F.sum("amount").alias("volume"), F.count("tx_hash").alias("count"))
-                .collect()
-            )
-            top = (
-                df.filter(F.col("standard") == "ERC-20")
-                .groupBy("contract")
-                .agg(F.sum("amount").alias("volume"))
-                .orderBy(F.desc("volume"))
-                .limit(4)
-                .collect()
-            )
-            summary_row = df.agg(
-                F.count("*").alias("total"),
-                F.sum((F.col("standard") == "ERC-20").cast("long")).alias("erc20"),
-                F.sum((F.col("standard") == "ERC-721").cast("long")).alias("erc721"),
-                F.countDistinct("contract").alias("contracts"),
-                F.sum(F.when(F.col("standard") == "ERC-20", F.col("amount")).otherwise(0.0)).alias("vol"),
-            ).collect()[0]
-        finally:
-            # a failed collect must not leave the frame pinned
-            df.unpersist()
 
-        erc20 = {r["hour"]: r for r in hourly if r["standard"] == "ERC-20"}
-        erc721 = {r["hour"]: r for r in hourly if r["standard"] == "ERC-721"}
-        all_hours = sorted({r["hour"] for r in hourly})
+        all_hours = sorted({r["hour"] for r in groups})
+        erc20_vol = defaultdict(float)
+        erc721_cnt = Counter()
+        contract_vol = defaultdict(float)
+        per_standard = Counter()
+        for r in groups:
+            per_standard[r["standard"]] += r["rows"]
+            if r["standard"] == "ERC-20":
+                # Spark's sum skips nulls
+                erc20_vol[r["hour"]] += r["volume"] or 0.0
+                contract_vol[r["contract"]] += r["volume"] or 0.0
+            elif r["standard"] == "ERC-721":
+                erc721_cnt[r["hour"]] += r["count"]
+        top = sorted(contract_vol.items(), key=lambda kv: -kv[1])[:4]
 
         return {
             "labels": [h.strftime("%H:%M") for h in all_hours],
             "erc20_vol": [
-                round(float(erc20[h]["volume"]) / 1e18, 2) if h in erc20 else 0
+                round(erc20_vol[h] / 1e18, 2) if h in erc20_vol else 0
                 for h in all_hours
             ],
-            "erc721_cnt": [int(erc721[h]["count"]) if h in erc721 else 0 for h in all_hours],
+            "erc721_cnt": [erc721_cnt[h] for h in all_hours],
             "summary": {
-                "total_transfers": int(summary_row["total"]),
-                "erc20_transfers": int(summary_row["erc20"]),
-                "erc721_transfers": int(summary_row["erc721"]),
-                "unique_contracts": int(summary_row["contracts"]),
-                "total_volume_eth": round(float(summary_row["vol"]) / 1e18, 2),
+                "total_transfers": sum(per_standard.values()),
+                "erc20_transfers": per_standard["ERC-20"],
+                "erc721_transfers": per_standard["ERC-721"],
+                # countDistinct ignores null contracts
+                "unique_contracts": len({r["contract"] for r in groups} - {None}),
+                "total_volume_eth": round(sum(contract_vol.values()) / 1e18, 2),
             },
             "top_contracts": [
-                {"contract": r["contract"][:10] + "...",
-                 "volume_eth": round(float(r["volume"]) / 1e18, 2)}
-                for r in top
+                {"contract": contract[:10] + "...",
+                 "volume_eth": round(volume / 1e18, 2)}
+                for contract, volume in top
             ],
         }

@@ -20,14 +20,15 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 def main() -> int:
     from defi_etl_platform_sqlglot_implementation__spark import gates, registry, session
     from defi_etl_platform_sqlglot_implementation__spark.operators.risk import il_scan
-    from defi_etl_platform_sqlglot_implementation__spark.plans.dialects import (
-        all_dialects,
-        transfer_volume_sql,
-    )
-    from defi_etl_platform_sqlglot_implementation__spark.plans.queries import (
+    from defi_etl_platform_sqlglot_implementation__spark.plans import (
         CANONICAL_QUERIES,
+        DIALECTS,
+        transpile,
+        validate_sql,
     )
-    from defi_etl_platform_sqlglot_implementation__spark.plans.sqlutil import validate_sql
+    from defi_etl_platform_sqlglot_implementation__spark.plans.transpiler import (
+        UnsupportedConstructError,
+    )
 
     gates.discover()
     spark = session(4, "defi-spark-dry-run")
@@ -41,9 +42,13 @@ def main() -> int:
         print(f"canonical {name}: {status}")
 
     # 2. all-dialect emission (the reference's CI transpile smoke)
-    for d in all_dialects():
-        sql = transfer_volume_sql(d)
-        print(f"dialect {d}: {len(sql)} chars")
+    for name, sql in CANONICAL_QUERIES.items():
+        for d in DIALECTS:
+            try:
+                print(f"transpile {name} -> {d}: {len(transpile(sql, d))} chars")
+            except UnsupportedConstructError as exc:
+                failures += 1
+                print(f"transpile {name} -> {d}: UNSUPPORTED {exc}")
 
     # 3. IL model sanity (reference run_pipeline.py:50-56)
     row = il_scan(spark, ratios=[2.0]).collect()[0]

@@ -7,13 +7,26 @@ from __future__ import annotations
 
 from collections import Counter
 
+import pytest
+
 from defi_etl_platform_sqlglot_implementation__spark.operators.bpe import (
     train_bpe,
     vocab_from_sequences,
     word_frequencies,
 )
+from defi_etl_platform_sqlglot_implementation__spark.operators.materialize import (
+    material_scope,
+)
 
 SF = "/root/testdata/sf0.001"
+
+
+@pytest.fixture(autouse=True)
+def _scope():
+    """train_bpe tracks its working frames in the materialization scope;
+    each test releases them on exit, as library callers do."""
+    with material_scope():
+        yield
 
 
 def _reference_bpe(word_freq: dict[str, int], n_merges: int):
@@ -64,7 +77,6 @@ def test_merge_sequence_vocab_and_segmentations_match_reference(spark):
             ref_vocab[s] += 1
             ref_freqs[s] += wf[w]
     assert vocab == {s: (ref_vocab[s], ref_freqs[s]) for s in ref_vocab}
-    seqs.unpersist()
 
 
 def test_greedy_left_to_right_merge_semantics(spark):
@@ -74,16 +86,14 @@ def test_greedy_left_to_right_merge_semantics(spark):
     assert merges[0][:2] == ("a", "a")
     seq = seqs.collect()[0].seq
     assert list(seq) == ["aa", "a", "</w>"]
-    seqs.unpersist()
 
 
 def test_merge_stops_when_no_pairs_remain(spark):
     docs = spark.createDataFrame([(0, "x y")], "doc_id long, text string")
-    merges, seqs = train_bpe(docs, n_merges=50)
+    merges, _ = train_bpe(docs, n_merges=50)
     # each word is one char + </w>: exactly one mergeable pair per word,
     # then singleton symbols -> training must stop early, not loop
     assert 0 < len(merges) < 50
-    seqs.unpersist()
 
 
 def test_non_bmp_symbols_split_as_code_points(spark):
@@ -116,8 +126,7 @@ def test_encode_words_matches_reference_application(spark):
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(120)
     wf = {r.word: r.freq for r in word_frequencies(docs).collect()}
-    merges, seqs = train_bpe(docs, n_merges=6)
-    seqs.unpersist()
+    merges, _ = train_bpe(docs, n_merges=6)
 
     # held-out words: some share subword structure, some have unseen chars
     new_words = ["tablet", "scanner", "zzz", "xqj", "merge", "windowless"]
@@ -156,7 +165,6 @@ def test_duckdb_ctes_match_on_exhausted_merge_supply(spark):
     assert len(merges) < 6  # supply genuinely exhausts
     vocab = {(r.symbol, r.n_words, r.total_freq)
              for r in vocab_from_sequences(seqs).collect()}
-    seqs.unpersist()
 
     con = duckdb.connect()
     con.register("documents", pd.DataFrame({"doc_id": [0],

@@ -109,6 +109,28 @@ def test_driver_local_rows_enter_plans_only_through_local_frame():
     assert hits == []
 
 
+def test_persisted_frames_are_released_only_by_their_owner():
+    """No ``cache`` call anywhere in the package; ``unpersist`` only in
+    operators/materialize.py and the two loop-local releases."""
+    owner = gates.PKG_DIR / "operators" / "materialize.py"
+    spans = {}
+    for rel, name in (("bpe.py", "train_bpe"), ("similarity.py", "kmeans_micro")):
+        path = gates.PKG_DIR / "operators" / rel
+        fn = next(n for n in ast.parse(path.read_text()).body
+                  if isinstance(n, ast.FunctionDef) and n.name == name)
+        spans[path] = (fn.lineno, fn.end_lineno)
+    caches, unpersists = [], []
+    for path in sorted(gates.PKG_DIR.rglob("*.py")):
+        lo, hi = spans.get(path, (0, -1))
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            where = f"{path.relative_to(ROOT)}:{i}"
+            if ".cache" + "()" in line:
+                caches.append(where)
+            if ".unpersist" + "(" in line and path != owner and not lo <= i <= hi:
+                unpersists.append(where)
+    assert caches == [] and unpersists == []
+
+
 def test_check_oracle_changed_runs_the_ledger_changed_gates():
     sys.path.insert(0, str(ROOT / "scripts"))
     try:

@@ -4,9 +4,11 @@ actually executing (the reference only transpiles it)."""
 from defi_etl_platform_sqlglot_implementation__spark.pipeline import run_batch
 from defi_etl_platform_sqlglot_implementation__spark.plans.sqlutil import (
     analyze_sql,
-    get_all_dialects,
-    transpile,
     validate_sql,
+)
+from defi_etl_platform_sqlglot_implementation__spark.plans.transpiler import (
+    DIALECTS,
+    transpile,
 )
 from defi_etl_platform_sqlglot_implementation__spark.plans.queries import (
     build_block_range_query,
@@ -83,7 +85,7 @@ class TestSQLUtil:
         assert len(errors) >= 1
 
     def test_all_dialects(self):
-        d = get_all_dialects()
+        d = DIALECTS
         for x in ["bigquery", "snowflake", "duckdb", "spark"]:
             assert x in d
 

@@ -2,6 +2,7 @@
 (reference api/data_service.py + server.py)."""
 
 import json
+import types
 from pathlib import Path
 
 import pytest
@@ -79,6 +80,77 @@ class TestTransfersCache:
         with pytest.raises(Exception, match="injected"):
             DataService(spark).get_transfer_data()
         assert set(jsc.getPersistentRDDs().keys()) == before
+
+
+class TestTransfersAggregate:
+    def test_runs_at_most_two_jobs(self, spark):
+        svc, sc = DataService(spark), spark.sparkContext
+        svc.get_transfer_data()  # warm
+        sc.setJobGroup("transfers-jobs", "transfers route")
+        try:
+            svc.get_transfer_data()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(sc.statusTracker().getJobIdsForGroup("transfers-jobs")) <= 2
+
+    def test_payload_equals_the_three_aggregate_form(self, spark, monkeypatch):
+        monkeypatch.setattr(data_service, "time",
+                            types.SimpleNamespace(time=lambda: 1_700_000_000.0))
+        svc = DataService(spark)
+        assert _json(svc.get_transfer_data()) == _json(_three_aggregate_transfers(svc))
+
+
+def _three_aggregate_transfers(svc):
+    """/api/transfers as three aggregates over one decoded frame (hourly
+    series, top contracts, summary), each collected on its own: the
+    reference form of the single-aggregate route."""
+    events = svc._events(data_service.make_synthetic_transfer_messages(n=200))
+    df = data_service.decode_transfers(events).withColumn(
+        "hour", F.date_trunc("hour", "block_timestamp"))
+    hourly = (
+        df.groupBy("hour", "standard")
+        .agg(F.sum("amount").alias("volume"), F.count("tx_hash").alias("count"))
+        .collect()
+    )
+    top = (
+        df.filter(F.col("standard") == "ERC-20")
+        .groupBy("contract")
+        .agg(F.sum("amount").alias("volume"))
+        .orderBy(F.desc("volume"))
+        .limit(4)
+        .collect()
+    )
+    summary_row = df.agg(
+        F.count("*").alias("total"),
+        F.sum((F.col("standard") == "ERC-20").cast("long")).alias("erc20"),
+        F.sum((F.col("standard") == "ERC-721").cast("long")).alias("erc721"),
+        F.countDistinct("contract").alias("contracts"),
+        F.sum(F.when(F.col("standard") == "ERC-20", F.col("amount")).otherwise(0.0)).alias("vol"),
+    ).collect()[0]
+
+    erc20 = {r["hour"]: r for r in hourly if r["standard"] == "ERC-20"}
+    erc721 = {r["hour"]: r for r in hourly if r["standard"] == "ERC-721"}
+    all_hours = sorted({r["hour"] for r in hourly})
+    return {
+        "labels": [h.strftime("%H:%M") for h in all_hours],
+        "erc20_vol": [
+            round(float(erc20[h]["volume"]) / 1e18, 2) if h in erc20 else 0
+            for h in all_hours
+        ],
+        "erc721_cnt": [int(erc721[h]["count"]) if h in erc721 else 0 for h in all_hours],
+        "summary": {
+            "total_transfers": int(summary_row["total"]),
+            "erc20_transfers": int(summary_row["erc20"]),
+            "erc721_transfers": int(summary_row["erc721"]),
+            "unique_contracts": int(summary_row["contracts"]),
+            "total_volume_eth": round(float(summary_row["vol"]) / 1e18, 2),
+        },
+        "top_contracts": [
+            {"contract": r["contract"][:10] + "...",
+             "volume_eth": round(float(r["volume"]) / 1e18, 2)}
+            for r in top
+        ],
+    }
 
 
 class TestGoldenPayloads:

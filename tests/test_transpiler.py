@@ -9,6 +9,7 @@ import duckdb
 import pandas as pd
 import pytest
 
+from defi_etl_platform_sqlglot_implementation__spark import plans
 from defi_etl_platform_sqlglot_implementation__spark.plans import sqlutil
 from defi_etl_platform_sqlglot_implementation__spark.plans.transpiler import (
     DIALECTS,
@@ -179,11 +180,11 @@ def test_string_literals_never_rewritten():
     assert transpile(q, "duckdb") == q
 
 
-def test_sqlutil_falls_back_to_rule_transpiler():
-    if sqlutil._HAS_SQLGLOT:
-        pytest.skip("sqlglot present; fallback path not reachable")
-    out = sqlutil.transpile(
-        "SELECT date_trunc('hour', ts) FROM e", "duckdb", read="spark"
+def test_plans_transpile_is_the_rule_transpiler():
+    assert plans.transpile is transpile
+    assert plans.DIALECTS is DIALECTS
+    out = plans.transpile(
+        "SELECT date_trunc('hour', ts) FROM e", "duckdb", source="spark"
     )
     assert "DATE_TRUNC('hour', ts)" in out
 

@@ -237,10 +237,10 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     from pyspark.sql import functions as F
 
-    from defi_etl_platform_sqlglot_implementation__spark.functions.hex import hex_to_double
+    from defi_etl_platform_sqlglot_implementation__spark.functions.hex import eip55_checksum
 
     (spark.range(int(cpus) * 1000).repartition(int(cpus))
-     .select(hex_to_double(F.format_string("%x", "id")))
+     .select(eip55_checksum(F.format_string("0x%040x", "id")))
      .write.mode("overwrite").format("noop").save())
 
     # min of N runs per query (SPARK_GRAFT_BENCH_RUNS, default 3): the

@@ -10,7 +10,6 @@ from .hex import (
     eip55_checksum,
     fn_selector,
     hex_to_double,
-    hex_to_double_cols,
     hex_to_long,
     topic_address,
 )
@@ -26,7 +25,6 @@ __all__ = [
     "eip55_checksum",
     "fn_selector",
     "hex_to_double",
-    "hex_to_double_cols",
     "hex_to_long",
     "topic_address",
     "TOKEN_STANDARDS",

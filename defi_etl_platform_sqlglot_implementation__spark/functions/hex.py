@@ -1,20 +1,26 @@
-"""Hex-decode helpers: the engine's only irreducible Python UDF surface.
+"""Hex-decode helpers: uint256/int64 decode in the JVM, EIP-55 in Python.
 
 SURVEY.md §2.10: after rewriting everything else to built-ins, the custom
-surface is (1) uint256-hex -> float64 and (2) EIP-55 checksumming. Both are
-Arrow-batched pandas UDFs (never row-at-a-time ``udf``). Everything else in
-this module is pure column expressions that stay inside whole-stage codegen.
+surface was (1) uint256-hex -> float64 and (2) EIP-55 checksumming. The
+first is now plain column algebra over ``conv`` and decimal casts that
+stays inside whole-stage codegen; only EIP-55 (keccak) remains a Python
+UDF, Arrow-batched (never row-at-a-time ``udf``).
 
 Numeric semantics deliberately match the reference: token amounts are
-``int(hex, 16)`` then degraded to float64 (reference etl_pipeline.py:97,129)
-— Python's int->float conversion is correctly rounded, and so is ours, since
-we do exactly that inside the UDF.
+``int(hex, 16)`` then degraded to float64 (reference etl_pipeline.py:97,129),
+i.e. the correctly-rounded nearest double. ``hex_to_double`` gets there with
+one rounding: the top 16 significant nibbles become an exact
+``decimal(20,0)``, a sticky low bit records whether any lower nibble is
+non-zero (the top nibble is non-zero, so the value has >= 61 bits and the
+low bit sits below every rounding boundary), the decimal -> double cast
+rounds once to nearest-even, and the power-of-two scale is exact.
 
-Scale note (100 TB): ``hex_to_double_cols`` is a JVM-only alternative that
-chunks the hex string through ``conv`` in 48-bit limbs and combines in
-double arithmetic — no Python boundary at all. It can differ from the exact
-path by 1 ulp on >53-bit values (double addition rounds per-limb), which is
-why the exact pandas UDF remains the parity default.
+Input contract (both decoders): an optional ``0x``/``0X`` prefix followed
+by hex digits; null, ``''`` and ``'0x'`` are 0 (null stays NULL for
+``hex_to_long``). Anything else -- signs, whitespace, underscores, non-hex
+characters -- is malformed: NaN for ``hex_to_double``, NULL for
+``hex_to_long``. A value above int64 is NULL for ``hex_to_long``; values of
+2**1024 and more are +inf for ``hex_to_double``.
 """
 
 from __future__ import annotations
@@ -23,49 +29,42 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, LongType, StringType
+from pyspark.sql.types import StringType
 
 from .keccak import to_checksum_address as _checksum
 
-
-@pandas_udf(DoubleType())
-def hex_to_double(s: pd.Series) -> pd.Series:
-    """uint256 hex string ('0x…' or bare, '' / '0x' / null -> 0) -> float64.
-
-    Exactly ``float(int(h, 16))`` per the reference decoder
-    (etl_pipeline.py:96-97): correctly-rounded nearest double.
-    """
-
-    def conv(h: object) -> float:
-        if h is None:
-            return 0.0
-        h = str(h)
-        if h in ("", "0x"):
-            return 0.0
-        try:
-            return float(int(h, 16))
-        except ValueError:
-            return float("nan")
-
-    return s.map(conv).astype("float64")
+_TOP = 16  # nibbles conv turns into an exact unsigned 64-bit value
 
 
-@pandas_udf(LongType())
-def hex_to_long(s: pd.Series) -> pd.Series:
-    """hex string -> int64 (token ids; reference etl_pipeline.py:86)."""
+def _digits(h: Column) -> tuple[Column, Column]:
+    """(well-formed?, significant hex digits without prefix or leading zeros)."""
+    body = F.regexp_replace(h, "^0[xX]", "")
+    return body.rlike("^[0-9a-fA-F]*$"), F.regexp_replace(body, "^0+", "")
 
-    def conv(h: object) -> object:
-        if h is None:
-            return None
-        h = str(h)
-        if h in ("", "0x"):
-            return 0
-        try:
-            return int(h, 16)
-        except ValueError:
-            return None
 
-    return s.map(conv).astype("Int64")
+def hex_to_double(col: Column | str) -> Column:
+    """uint256 hex string -> float64, exactly ``float(int(h, 16))``."""
+    h = F.col(col) if isinstance(col, str) else col
+    ok, d = _digits(h)
+    n = F.length(d)
+    top = F.conv(F.substring(d, 1, _TOP), 16, 10).cast("decimal(20,0)")
+    sticky = d.rlike(f"^.{{{_TOP}}}.*[^0]") & (top % 2 == 0)
+    scale = F.pow(F.lit(2.0), F.greatest(n - _TOP, F.lit(0)) * 4)
+    return (
+        F.when(h.isNull() | (n == 0), F.lit(0.0))
+        .when(~ok, F.lit(float("nan")))
+        .otherwise((top + sticky.cast("int")).cast("double") * scale)
+    )
+
+
+def hex_to_long(col: Column | str) -> Column:
+    """hex string -> int64 (token ids; reference etl_pipeline.py:86); NULL
+    when malformed or above int64."""
+    ok, d = _digits(F.col(col) if isinstance(col, str) else col)
+    n = F.length(d)
+    fits = (n < _TOP) | ((n == _TOP) & (F.substring(d, 1, 1) < "8"))
+    return F.when(ok & (n == 0), F.lit(0).cast("long")).when(
+        ok & fits, F.conv(d, 16, 10).cast("long"))
 
 
 @pandas_udf(StringType())
@@ -93,23 +92,6 @@ def eip55_checksum(s: pd.Series) -> pd.Series:
             return s.map(mapped)
         return eip55_checksum_batch(s)
     return s.map(lambda a: None if a is None else _checksum(a))
-
-
-def hex_to_double_cols(col: Column) -> Column:
-    """JVM-only uint256-hex -> double via 48-bit ``conv`` limbs.
-
-    Splits the (0x-stripped, left-zero-padded-to-64) hex into 6 limbs of 12
-    hex chars (48 bits each — safely inside ``conv``'s unsigned-64 range),
-    then combines ``limb_i * 16^(12*i)`` in double arithmetic. 1-ulp
-    tolerance vs the exact UDF for values needing >53 bits.
-    """
-    h = F.lpad(F.regexp_replace(F.coalesce(col, F.lit("0")), "^0x", ""), 72, "0")
-    out = F.lit(0.0)
-    for i in range(6):
-        limb = F.substring(h, 1 + 12 * i, 12)
-        scale = float(16 ** (12 * (5 - i)))
-        out = out + F.conv(limb, 16, 10).cast("double") * F.lit(scale)
-    return out
 
 
 def topic_address(topic: Column) -> Column:

@@ -13,22 +13,22 @@ Faithful semantics:
 - rolling VaR/CVaR series (api/data_service.py:141-150): the window
   *excludes* the current row (fit on returns[i-w:i]) and only full windows
   emit — rowsBetween(-w, -1) + count == w. CVaR (mean below the window's own
-  quantile) has no single built-in: VaR via the window, then a bounded
-  self-join (j in [i-w, i-1], r_j <= q_i) + one aggregate (SURVEY.md §7.4.1).
+  quantile) has no single built-in: ``frame_var_cvar`` sorts each row's
+  frame once (``collect_list``) and derives both the quantile and the tail
+  mean from that array — one window, no self-join (SURVEY.md §7.4.1).
 - stress_test: shocks -> pnl = shock * position             (:124-143)
 - impermanent loss closed form over a ratio grid            (:158-204)
 
 Scale note: global-ordered windows are single-task; pass partition_col for
-the partitioned variant. The CVaR self-join is a range join bounded to
-`window` rows per row — linear, not quadratic, and shuffles on the ordering
-key only.
+the partitioned variant. The frame array holds `window` values per row —
+linear in rows, and the only shuffle is the window's own partitioning.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from ..sources.bronze import local_frame
@@ -90,6 +90,45 @@ def rolling_var(
     )
 
 
+def frame_var_cvar(
+    rows: DataFrame,
+    value_col: str,
+    frames: Mapping[str, WindowSpec],
+    confidence: float = 0.95,
+) -> DataFrame:
+    """Adds, per frame name ``f``: ``f_n`` (non-null values in the row's
+    frame), ``f_q`` (their ``percentile`` at 1 - confidence) and ``f_tail``
+    (the mean of the frame values <= ``f_q``; NULL for an empty frame).
+
+    Each frame is sorted once into an array; the quantile is Spark
+    ``Percentile``'s own interpolation over it — position (n-1)*p,
+    ``(hi-pos)*a + (pos-lo)*b``, and ``a`` itself when the position is
+    integral or both keys are equal — and the tail mean reads the same
+    array. Every step selects from the columns the step before projected:
+    inlining the window into each higher-order function re-evaluates it
+    per use."""
+    p = f"{1 - confidence!r}D"
+    out = rows.select("*", *[
+        F.sort_array(F.collect_list(value_col).over(w)).alias(f"_{f}_sorted")
+        for f, w in frames.items()])
+
+    def quantile(f: str) -> str:
+        srt, pos = f"_{f}_sorted", f"((size(_{f}_sorted) - 1) * {p})"
+        lo, hi = f"floor({pos})", f"ceil({pos})"
+        a, b = f"get({srt}, {lo})", f"get({srt}, {hi})"
+        return (f"CASE WHEN {hi} = {lo} OR {a} = {b} THEN {a} "
+                f"ELSE ({hi} - {pos}) * {a} + ({pos} - {lo}) * {b} END AS {f}_q")
+
+    out = out.selectExpr("*", *[e for f in frames for e in (
+        f"size(_{f}_sorted) AS {f}_n", quantile(f))])
+    out = out.selectExpr("*", *[
+        f"filter(_{f}_sorted, x -> x <= {f}_q) AS _{f}_tail" for f in frames])
+    return out.select(
+        *rows.columns, *[c for f in frames for c in (f"{f}_n", f"{f}_q")],
+        *[F.expr(f"try_divide(aggregate(_{f}_tail, 0D, (acc, x) -> acc + x), "
+                 f"size(_{f}_tail)) AS {f}_tail") for f in frames])
+
+
 def rolling_var_cvar(
     returns: DataFrame,
     idx_col: str,
@@ -101,57 +140,22 @@ def rolling_var_cvar(
 ) -> DataFrame:
     """Trailing-window VaR *and* CVaR where the window excludes the current
     row (api/data_service.py:141-150): rows with a full `window` preceding
-    rows emit (idx, var, cvar).
-
-    ``idx_col`` must be a unique orderable key; it need not be contiguous —
-    a dense ``row_number`` is derived internally so the rows-frame window
-    and the bounded self-join see the same neighborhoods.
+    rows emit (idx, var, cvar). ``idx_col`` must be a unique orderable key.
 
     ``partition_col=None`` reproduces the reference's single global series:
-    one sort task plus a broadcast-nested-loop range join — the documented
-    W3 scale bottleneck (SURVEY.md §7.4.1), kept for reference parity.
-    Passing a series key computes independent per-series windows (resetting
-    at boundaries) — the window sorts within partitions in parallel, and the
-    series-equality key turns the range self-join into a shuffled hash join
-    with the range as a residual filter. That is the 100 TB shape.
+    one sort task — the documented W3 scale bottleneck (SURVEY.md §7.4.1),
+    kept for reference parity. Passing a series key computes independent
+    per-series windows (resetting at boundaries) that sort within
+    partitions in parallel. That is the 100 TB shape.
     """
     pw = Window.partitionBy(partition_col) if partition_col else Window
-    base = returns.withColumn("_rn", F.row_number().over(pw.orderBy(idx_col)))
-    w = pw.orderBy("_rn").rowsBetween(-window, -1)
-    q = F.expr(f"percentile({value_col}, {1 - confidence})").over(w)
-    cnt = F.count(value_col).over(w)
-    anchor_cols = [F.col(idx_col).alias("_i"), F.col("_rn").alias("i"), "q"]
-    rs_cols = [F.col("_rn").alias("j"), F.col(value_col).alias("r_j")]
-    if partition_col:
-        anchor_cols.append(F.col(partition_col).alias("_p"))
-        rs_cols.append(F.col(partition_col).alias("_pj"))
-    with_q = (
-        base.withColumn("q", q)
-        .withColumn("_cnt", cnt)
-        .where(F.col("_cnt") == window)
-        .select(*anchor_cols)
+    w = pw.orderBy(idx_col).rowsBetween(-window, -1)
+    out = frame_var_cvar(returns, value_col, {"w": w}, confidence)
+    return out.where(F.col("w_n") == window).select(
+        *([partition_col] if partition_col else []), idx_col,
+        (-F.col("w_q") * position_size).alias("var"),
+        (-F.col("w_tail") * position_size).alias("cvar"),
     )
-
-    rs = base.select(*rs_cols)
-    # bounded range join: j in [i-window, i-1] — `window` rows per anchor
-    cond = (F.col("j") >= F.col("i") - window) & (F.col("j") <= F.col("i") - 1)
-    if partition_col:
-        cond = (F.col("_p") == F.col("_pj")) & cond
-    group = (["_p"] if partition_col else []) + ["_i", "q"]
-    tail = (
-        with_q.join(rs, cond)
-        .where(F.col("r_j") <= F.col("q"))
-        .groupBy(*group)
-        .agg(F.avg("r_j").alias("tail_mean"))
-    )
-    out_cols = [
-        F.col("_i").alias(idx_col),
-        (-F.col("q") * position_size).alias("var"),
-        (-F.col("tail_mean") * position_size).alias("cvar"),
-    ]
-    if partition_col:
-        out_cols.insert(0, F.col("_p").alias(partition_col))
-    return tail.select(*out_cols)
 
 
 def stress_test(

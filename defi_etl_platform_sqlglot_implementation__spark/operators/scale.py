@@ -7,8 +7,9 @@ physical shape.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -93,35 +94,17 @@ def salted_join(
     return big_s.join(small_s, keys + ["_salt"], how).drop("_salt")
 
 
-def rolling_quantile_exact(
+def _rolling_apply(
     df: DataFrame,
     order_cols: Sequence[str],
     value_col: str,
-    p: float,
-    window_rows: int,
-    out: str = "rolling_pct",
-    min_periods: int = 1,
-    partition_col: Column | None = None,
+    out: str,
+    partition_col: Column | None,
+    rolling: Callable[[np.ndarray], np.ndarray],
 ) -> DataFrame:
-    """Exact trailing rows-frame quantile via pandas' C rolling kernel.
-
-    Bit-identical to ``percentile(value) OVER (ROWS BETWEEN w-1 PRECEDING
-    AND CURRENT ROW)``: Spark's Percentile and DuckDB's quantile_cont both
-    interpolate ``lower*(1-t) + higher*t`` (pandas/numpy compute
-    ``lower + (higher-lower)*t``, which differs by 1 ulp on occasional
-    ties — enough to flip a %.6e digit — so the kernel interpolates
-    explicitly with the engines' formula). The JVM window re-aggregates
-    the full frame per row (no retraction support for percentile) —
-    O(n·w) with a large constant and, when unpartitioned, in ONE task;
-    the NumPy kernel is the same complexity fully vectorized, so the
-    single inevitable task stops dominating the pipeline.
-
-    ``partition_col=None`` reproduces the reference's single global order
-    (repartition(1) — the documented W1 scale bottleneck, SURVEY.md
-    §7.4.5); passing a coarse key runs one pandas kernel per partition in
-    parallel — the 100 TB shape, with windows resetting at boundaries.
-    """
-    import numpy as np
+    """Adds ``out = rolling(values in order)`` computed by one pandas
+    kernel over the whole frame or, with ``partition_col``, one kernel per
+    partition in parallel (windows reset at boundaries)."""
     import pandas as pd
     from pyspark.sql.types import DoubleType, StructField, StructType
 
@@ -133,6 +116,57 @@ def rolling_quantile_exact(
     schema = extend(df.schema)
     cols = list(df.columns)
     order = list(order_cols)
+
+    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        pdf = pdf.sort_values(order, kind="mergesort")
+        pdf[out] = rolling(pdf[value_col].to_numpy(dtype="float64"))
+        return pdf
+
+    if partition_col is None:
+        def fn(batches):
+            parts = [b for b in batches]
+            if not parts:
+                return
+            yield kernel(pd.concat(parts, ignore_index=True))
+
+        return df.repartition(1).mapInPandas(fn, schema)
+
+    tagged = df.withColumn("_part", partition_col)
+    out_df = tagged.groupBy("_part").applyInPandas(
+        lambda pdf: kernel(pdf), extend(tagged.schema)
+    )
+    return out_df.select(*cols, out)
+
+
+def rolling_quantile_exact(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    value_col: str,
+    p: float,
+    window_rows: int,
+    out: str = "rolling_pct",
+    min_periods: int = 1,
+    partition_col: Column | None = None,
+) -> DataFrame:
+    """Exact trailing rows-frame quantile via a NumPy kernel.
+
+    Bit-identical to ``percentile(value) OVER (ROWS BETWEEN w-1 PRECEDING
+    AND CURRENT ROW)``: Spark's Percentile and DuckDB's quantile_cont both
+    interpolate ``lower*(1-t) + higher*t`` (pandas/numpy compute
+    ``lower + (higher-lower)*t``, which differs by 1 ulp on occasional
+    ties — enough to flip a %.6e digit — so the kernel interpolates
+    explicitly with the engines' formula; ``rolling_quantile_pandas`` is
+    the pandas twin). The JVM window re-aggregates the full frame per row
+    (no retraction support for percentile) — O(n·w) with a large constant
+    and, when unpartitioned, in ONE task; the NumPy kernel is the same
+    complexity fully vectorized, so the single inevitable task stops
+    dominating the pipeline.
+
+    ``partition_col=None`` reproduces the reference's single global order
+    (repartition(1) — the documented W1 scale bottleneck, SURVEY.md
+    §7.4.5); passing a coarse key runs one pandas kernel per partition in
+    parallel — the 100 TB shape, with windows resetting at boundaries.
+    """
 
     def rolling_q(vals: np.ndarray) -> np.ndarray:
         n = vals.size
@@ -165,25 +199,31 @@ def rolling_quantile_exact(
                 )
         return res
 
-    def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        pdf = pdf.sort_values(order, kind="mergesort")
-        pdf[out] = rolling_q(pdf[value_col].to_numpy(dtype="float64"))
-        return pdf
+    return _rolling_apply(df, order_cols, value_col, out, partition_col, rolling_q)
 
-    if partition_col is None:
-        def fn(batches):
-            parts = [b for b in batches]
-            if not parts:
-                return
-            yield kernel(pd.concat(parts, ignore_index=True))
 
-        return df.repartition(1).mapInPandas(fn, schema)
+def rolling_quantile_pandas(
+    df: DataFrame,
+    order_cols: Sequence[str],
+    value_col: str,
+    p: float,
+    window_rows: int,
+    out: str = "rolling_pct",
+    partition_col: Column | None = None,
+) -> DataFrame:
+    """``rolling(window_rows, min_periods=1).quantile(p)`` — pandas' own
+    kernel (a sliding skiplist, O(n log w)) and so pandas' own rule: ``a``
+    at an integral position, else ``a + (b-a)*t``. That can be a different
+    double from ``rolling_quantile_exact``'s ``a*(1-t) + b*t`` (DuckDB's
+    ``quantile_cont`` rule), e.g. when ``a == b``; callers whose contract
+    is the pandas reference use this one."""
+    import pandas as pd
 
-    tagged = df.withColumn("_part", partition_col)
-    out_df = tagged.groupBy("_part").applyInPandas(
-        lambda pdf: kernel(pdf), extend(tagged.schema)
-    )
-    return out_df.select(*cols, out)
+    def rolling_q(vals: np.ndarray) -> np.ndarray:
+        return (pd.Series(vals).rolling(window_rows, min_periods=1)
+                .quantile(p, interpolation="linear").to_numpy())
+
+    return _rolling_apply(df, order_cols, value_col, out, partition_col, rolling_q)
 
 
 def partitioned_rolling_percentile(

@@ -4,7 +4,7 @@ Re-expression of the reference's ``DeFiSwapParser`` (etl_pipeline.py:137-188).
 The reference ABI-decodes 4 uint256 slots with eth_abi; a uint256 slot is a
 fixed 64-hex-char big-endian field, so the decode is pure column algebra:
 ``substring(data, 3 + 64*k, 64)`` per slot -> uint256-hex -> float64. No
-eth_abi, no Python loop, stays parallel and (except the hex UDF) in codegen.
+eth_abi, no Python loop, stays parallel and in codegen.
 
 Deliberate divergence, documented: the reference preprocesses data with
 ``data.lstrip("0x")`` (etl_pipeline.py:148). ``str.lstrip`` strips *any*
@@ -58,10 +58,10 @@ def parse_swaps(events: DataFrame) -> DataFrame:
     data = p["data"]
     # both-denominators-zero drop (reference ZeroDivisionError path, :159)
     # tested on the RAW hex slots: a uint256 slot decodes to 0.0 iff every
-    # hex digit is '0'. Doing this as a JVM string predicate BEFORE the
-    # projection means the Arrow UDF below runs exactly once per surviving
-    # row — a UDF-column filter would be pushed ahead of the projection as
-    # its own ArrowEvalPython stage, decoding slots 0/1 twice.
+    # hex digit is '0'. Doing this as a string predicate BEFORE the
+    # projection means the decode below runs exactly once per surviving
+    # row — a filter on the decoded columns would be pushed below the
+    # projection with the decode inlined, decoding slots 0/1 twice.
     base = base.filter(
         ~(
             F.substring(data, 3, 64).rlike("^0{64}$")

@@ -3,9 +3,9 @@
 Spark-first re-expression of the reference's row-loop decoder
 (``TokenTransferDecoder``, reference etl_pipeline.py:65-130): the per-row
 ``decode_log`` becomes one declarative projection — filters, ``when``
-branches and substrings that Catalyst keeps inside whole-stage codegen —
-with the two irreducible pandas UDFs (uint256 hex -> double, EIP-55) applied
-as Arrow-batched columns.
+branches, substrings and the ``conv``-based hex decode that Catalyst keeps
+inside whole-stage codegen — with EIP-55, the one irreducible pandas UDF,
+applied as an Arrow-batched column (and skipped by ``checksum=False``).
 
 Faithful semantics:
 - event_type gate ``in ("token_transfer","log")``     (etl_pipeline.py:114)
@@ -49,18 +49,13 @@ def decode_transfers(events: DataFrame, checksum: bool = True) -> DataFrame:
         from_addr = eip55_checksum(from_addr)
         to_addr = eip55_checksum(to_addr)
 
-    data = p["data"]
-    amount_20 = F.when(
-        data.isNull() | (data == "") | (data == "0x"), F.lit(0.0)
-    ).otherwise(hex_to_double(data))
-
     return base.select(
         F.when(is_721, F.lit("ERC-721")).otherwise(F.lit("ERC-20")).alias("standard"),
         p["contract"].alias("contract"),
         from_addr.alias("from"),
         to_addr.alias("to"),
         F.when(is_721, hex_to_long(F.try_element_at(topics, F.lit(4)))).alias("token_id"),
-        F.when(is_721, F.lit(1.0)).otherwise(amount_20).alias("amount"),
+        F.when(is_721, F.lit(1.0)).otherwise(hex_to_double(p["data"])).alias("amount"),
         F.col("block_number"),
         F.timestamp_seconds(F.col("block_timestamp")).alias("block_timestamp"),
         p["tx_hash"].alias("tx_hash"),

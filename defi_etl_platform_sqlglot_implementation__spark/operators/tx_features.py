@@ -65,13 +65,12 @@ def engineer_transactions(
         )
 
     if "gas_price" in cols:
-        from .scale import rolling_quantile_exact
+        from .scale import rolling_quantile_pandas
 
-        # exact trailing quantile; min_periods=1 == rows-frame semantics.
-        # pandas rolling kernel == reference's own rolling().quantile(0.9)
-        # (etl_pipeline.py:230) and == percentile() over a rows frame —
-        # same linear interpolation on the same doubles.
-        df = rolling_quantile_exact(
+        # the reference's own rolling().quantile(0.9) (etl_pipeline.py:230),
+        # min_periods=1: pandas' kernel, so a tie at the p90 position
+        # returns the tied value itself and the strict > below stays false
+        df = rolling_quantile_pandas(
             df, order_cols, "gas_price_gwei", 0.9, GAS_P90_WINDOW,
             out="gas_p90",
             partition_col=F.col(partition_col) if partition_col is not None else None,

@@ -21,9 +21,12 @@ Every query aliases computed columns identically on both sides.
 
 from __future__ import annotations
 
+import os
+import weakref
 from collections.abc import Callable
 
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -69,13 +72,36 @@ def ensure_session(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# per session: table path -> ((mtime_ns, size), schema inferred by its first read)
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (one footer job)
+    only on a session's first read of a table version; later reads pin it.
+    A path that cannot be stat-ed locally (missing, or not a local file)
+    takes Spark's own read, and with it Spark's error."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    stamp = (st.st_mtime_ns, st.st_size)
+    memo = _SCHEMAS.setdefault(spark, {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == stamp:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    memo[path] = (stamp, df.schema)
+    return df
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session(spark)
     path = f"{sf_dir}/{name}.parquet"
     try:
-        df = spark.read.parquet(path)
-    except Exception:
-        if name != "events":
+        df = _read_parquet(spark, path)
+    except AnalysisException as exc:
+        if name != "events" or exc.getCondition() != "PARQUET_TYPE_ILLEGAL":
             raise
         # A TIMESTAMP(NANOS) events file (the round-1 era format) is
         # rejected by Spark's reader unless nanos are surfaced as raw
@@ -85,7 +111,7 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # are otherwise unreadable — are decoded. With micros testdata
         # this path never runs, so no session mutation occurs.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
     if name == "events":
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):

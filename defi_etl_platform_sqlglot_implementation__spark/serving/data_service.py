@@ -16,12 +16,12 @@ import time
 from collections import Counter, defaultdict
 
 import numpy as np
-from pyspark.sql import SparkSession
+from pyspark.sql import SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.keccak import ERC20_TRANSFER_TOPIC
 from ..operators.mev import mev_scores
-from ..operators.risk import il_scan, rolling_var_cvar, stress_test, var_cvar
+from ..operators.risk import frame_var_cvar, il_scan, stress_test
 from ..operators.transfers import decode_transfers
 from ..pipeline import lift_transactions
 from ..sources.bronze import local_frame, parse_raw_events
@@ -74,6 +74,11 @@ def make_synthetic_transfer_messages(n: int = 200, base_ts: int | None = None) -
     return messages
 
 
+def tx_block_number(i: int) -> int:
+    """Block of the i-th synthetic transaction: three per block."""
+    return 19_000_000 + (i // 3) * 10
+
+
 def make_synthetic_tx_messages(n: int = 100) -> list[str]:
     """Seed-7 MEV-spiked transactions (reference data_service.py:78-107)."""
     rng = np.random.default_rng(7)
@@ -85,7 +90,7 @@ def make_synthetic_tx_messages(n: int = 100) -> list[str]:
         messages.append(json.dumps({
             "chain_id": 1,
             "network": "ethereum-mainnet",
-            "block_number": 19_000_000 + (i // 3) * 10,
+            "block_number": tx_block_number(i),
             "block_timestamp": now - (n - i) * 12,
             "event_type": "transaction",
             "payload": {
@@ -109,9 +114,13 @@ class DataService:
     def __init__(self, spark: SparkSession):
         self.spark = spark
 
+    def _local(self, rows: list[tuple], schema: str):
+        # a route's fixture is a few hundred rows: one partition, so the
+        # route's window or aggregate over it needs no shuffle
+        return local_frame(self.spark, rows, schema).coalesce(1)
+
     def _events(self, messages: list[str]):
-        raw = local_frame(self.spark, [(m,) for m in messages], "value string")
-        return parse_raw_events(raw)
+        return parse_raw_events(self._local([(m,) for m in messages], "value string"))
 
     # -- /api/var (reference data_service.py:118-170) -----------------------
 
@@ -132,20 +141,20 @@ class DataService:
             for i in range(n)
         ]
 
-        returns_df = local_frame(
-            self.spark, [(i, float(r)) for i, r in enumerate(daily_returns)],
-            "i long, r double",
-        )
-        rolling = rolling_var_cvar(
-            returns_df, idx_col="i", window=window,
-            confidence=0.95, position_size=position_size,
-        )
-        by_i = {r["i"]: r for r in rolling.collect()}
-        var_series = [round(by_i[i]["var"], 2) if i in by_i else None for i in range(n)]
-        cvar_series = [round(by_i[i]["cvar"], 2) if i in by_i else None for i in range(n)]
-
-        summary = var_cvar(returns_df, confidence=0.95,
-                           position_size=position_size).collect()[0]
+        returns_df = self._local([(i, float(r)) for i, r in enumerate(daily_returns)],
+                                 "i long, r double")
+        # one plan: each row's trailing window and the whole series
+        order = Window.orderBy("i")
+        rows = sorted(frame_var_cvar(returns_df, "r", {
+            "roll": order.rowsBetween(-window, -1),
+            "all": order.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing),
+        }, confidence=0.95).collect(), key=lambda r: r["i"])
+        full = [r["roll_n"] == window for r in rows]
+        var_series = [round(-r["roll_q"] * position_size, 2) if f else None
+                      for r, f in zip(rows, full)]
+        cvar_series = [round(-r["roll_tail"] * position_size, 2) if f else None
+                       for r, f in zip(rows, full)]
+        summary = rows[0]  # the whole-series frame reads the same on every row
         stress = stress_test(self.spark, [-0.10, -0.20, -0.30, -0.50],
                              position_size=position_size)
 
@@ -155,11 +164,11 @@ class DataService:
             "var_series": var_series,
             "cvar_series": cvar_series,
             "summary": {
-                "var_95": round(summary["var"], 2),
-                "cvar_95": round(summary["cvar"], 2),
+                "var_95": round(-summary["all_q"] * position_size, 2),
+                "cvar_95": round(-summary["all_tail"] * position_size, 2),
                 "position_usd": position_size,
-                "returns_used": summary["returns_used"],
-                "method": summary["method"],
+                "returns_used": summary["all_n"],
+                "method": "historical_simulation",
             },
             "stress_test": [r.asDict() for r in stress.collect()],
         }
@@ -199,7 +208,8 @@ class DataService:
     # -- /api/mev (reference data_service.py:210-261) -----------------------
 
     def get_mev_data(self) -> dict:
-        events = self._events(make_synthetic_tx_messages(n=120))
+        n = 120
+        events = self._events(make_synthetic_tx_messages(n=n))
         # only the two columns mev_scores reads: engineer_transactions'
         # gas_price_gwei, without its rolling gas_p90 kernel, which
         # Catalyst cannot prune
@@ -208,18 +218,17 @@ class DataService:
             (F.col("gas_price").cast("double") / 1e9).alias("gas_price_gwei"),
         )
 
-        # the bounded results are sorted on the driver: a Spark orderBy
-        # adds a range-partition sampling job per collect
-        block_nums = sorted(
-            r["block_number"] for r in tx.select("block_number").distinct().collect()
-        )
+        # the swap fixture covers the tx fixture's blocks
+        block_nums = sorted({tx_block_number(i) for i in range(n)})
         rng = np.random.default_rng(7)
         swap_rows = []
         for b in block_nums:
             for _ in range(int(rng.integers(1, 5))):
-                swap_rows.append((int(b), str(rng.choice(["0xpool1", "0xpool2", "0xpool3"]))))
-        swaps = local_frame(self.spark, swap_rows, "block_number long, pool string")
+                swap_rows.append((b, str(rng.choice(["0xpool1", "0xpool2", "0xpool3"]))))
+        swaps = self._local(swap_rows, "block_number long, pool string")
 
+        # the bounded result is sorted on the driver: a Spark orderBy
+        # adds a range-partition sampling job per collect
         scores = sorted(mev_scores(tx, swaps).collect(), key=lambda r: r["block_number"])[-48:]
         if not scores:
             return {"blocks": [], "scores": [], "colors": [], "summary": {}}

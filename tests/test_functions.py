@@ -1,5 +1,7 @@
 """Scalar-function layer: keccak/EIP-55 vectors, hex decode parity."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -12,7 +14,6 @@ from defi_etl_platform_sqlglot_implementation__spark.functions.keccak import (
 )
 from defi_etl_platform_sqlglot_implementation__spark.functions.hex import (
     hex_to_double,
-    hex_to_double_cols,
     hex_to_long,
 )
 from defi_etl_platform_sqlglot_implementation__spark.functions.maps import (
@@ -89,14 +90,51 @@ class TestHexDecode:
         got = [r[0] for r in df.select(hex_to_long("h")).collect()]
         assert got == [1, 42]
 
-    def test_jvm_limb_path_close(self, spark):
-        """hex_to_double_cols (pure conv limbs) within 1 ulp of exact."""
-        vals = [10 * 10**18, 123456789, 2**200 + 12345, 0]
-        df = spark.createDataFrame([(hex(v),) for v in vals], ["h"])
-        got = [r[0] for r in df.select(hex_to_double_cols(F.col("h"))).collect()]
-        for g, v in zip(got, vals):
-            exact = float(v)
-            assert g == pytest.approx(exact, rel=1e-15)
+    def test_exact_on_constructed_ties(self, spark):
+        """Equals float(int(h, 16)) at 54-256 bits, where rounding to 53
+        bits has to look past the top 16 nibbles: exact half-ulp ties
+        (round half to even) and the values one either side of them."""
+        rng = random.Random(7)
+        vals = []
+        for _ in range(300):
+            shift = rng.randint(1, 203)
+            base = (rng.getrandbits(52) | (1 << 52)) << shift
+            half = 1 << (shift - 1)
+            vals += [base + half, base + half - 1, base + half + 1, base + 1]
+        vals += [rng.getrandbits(rng.randint(1, 256)) for _ in range(300)]
+        hexes = [hex(v) for v in vals] + ["0x000" + hex(v)[2:].upper() for v in vals[:50]]
+        df = spark.createDataFrame([(h,) for h in hexes], ["h"])
+        got = [r[0] for r in df.select(hex_to_double("h")).collect()]
+        assert got == [float(int(h, 16)) for h in hexes]
+
+    def test_malformed_input(self, spark):
+        cases = ["0xg1", "-0x1", " 0x1", "1_0", "0x0x1", "0X1F"]
+        df = spark.createDataFrame([(c,) for c in cases], ["h"])
+        rows = df.select(hex_to_double("h").alias("d"), hex_to_long("h").alias("l")).collect()
+        assert all(r["d"] != r["d"] and r["l"] is None for r in rows[:-1])  # NaN / NULL
+        assert (rows[-1]["d"], rows[-1]["l"]) == (31.0, 31)
+
+    def test_hex_to_long_edges(self, spark):
+        cases = [None, "", "0x", "0x7fffffffffffffff", "0x8000000000000000",
+                 "0x" + "0" * 48 + "ffffffffffffffff", "0x" + "1" * 17]
+        df = spark.createDataFrame([(c,) for c in cases], "h string")
+        got = [r[0] for r in df.select(hex_to_long("h")).collect()]
+        # token ids above int64 are NULL instead of failing the batch
+        assert got == [None, 0, 0, 2**63 - 1, None, None, None]
+
+    def test_decoders_start_no_python_worker(self, spark):
+        from .conftest import events_df, make_swap_message, make_transfer_message
+        from defi_etl_platform_sqlglot_implementation__spark.operators.swaps import (
+            parse_swaps,
+        )
+        from defi_etl_platform_sqlglot_implementation__spark.operators.transfers import (
+            decode_transfers,
+        )
+
+        ev = events_df(spark, [make_transfer_message(), make_swap_message()])
+        for df in (decode_transfers(ev, checksum=False), parse_swaps(ev)):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
 
 
 class TestSelectorMap:

@@ -141,3 +141,27 @@ def test_check_oracle_changed_runs_the_ledger_changed_gates():
                             capture_output=True, text=True, check=True).stdout.split()
     names = check_oracle.gate_names(check_oracle.parse_args(["--changed"]), list(entry.queries()))
     assert names == listed
+
+
+def test_table_reads_infer_the_schema_once_per_table_version(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+    from pyspark.errors import AnalysisException
+
+    path = tmp_path / "tbl.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    sc = spark.sparkContext
+    registry.t(spark, str(tmp_path), "tbl")  # first read: the footer job
+    sc.setJobGroup("second-read", "t() again")
+    try:
+        again = registry.t(spark, str(tmp_path), "tbl")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("second-read")) == []
+    assert again.columns == ["a"] and again.count() == 2
+    # a rewritten table is a new version: its schema is read again
+    pq.write_table(pa.table({"a": [1, 2, 3], "b": ["x", "y", "z"]}), path)
+    assert registry.t(spark, str(tmp_path), "tbl").columns == ["a", "b"]
+    with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+        registry.t(spark, str(tmp_path), "missing")

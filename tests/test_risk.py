@@ -2,9 +2,11 @@
 
 import numpy as np
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from defi_etl_platform_sqlglot_implementation__spark.operators.risk import (
+    frame_var_cvar,
     il_scan,
     rolling_var,
     rolling_var_cvar,
@@ -74,6 +76,27 @@ class TestVaR:
             q = np.quantile(w, 0.05)
             assert rows[i]["var"] == pytest.approx(-q, rel=1e-12)
             assert rows[i]["cvar"] == pytest.approx(-w[w <= q].mean(), rel=1e-12)
+
+    def test_frame_quantile_is_spark_percentile(self, spark):
+        # few distinct values make equal keys at the interpolation
+        # positions; each is one whose two-key interpolation at the 0.95
+        # position is not the value itself, so only Percentile's equal-key
+        # shortcut returns it exactly
+        rng = np.random.default_rng(3)
+        pos = 29 * (1 - 0.95)
+        lo, hi = np.floor(pos), np.ceil(pos)
+        pool = [x for x in rng.normal(0, 0.03, 2000) if (hi - pos) * x + (pos - lo) * x != x]
+        vals = rng.choice(pool[:6], 400)
+        df = spark.createDataFrame([(i, float(x)) for i, x in enumerate(vals)], ["i", "r"])
+        w = Window.orderBy("i").rowsBetween(-30, -1)
+        for conf in (0.95, 0.9, 0.5):
+            got = sorted(frame_var_cvar(df, "r", {"w": w}, conf).withColumn(
+                "want", F.expr(f"percentile(r, {1 - conf})").over(w)).collect(),
+                key=lambda r: r["i"])
+            assert all(r["w_q"] == r["want"] for r in got)
+            for r in got[31::37]:
+                frame = vals[r["i"] - 30: r["i"]]
+                assert r["w_tail"] == pytest.approx(frame[frame <= r["w_q"]].mean(), rel=1e-12)
 
     def test_stress_test(self, spark):
         out = stress_test(spark, [-0.10, -0.30, -0.50], position_size=1_000_000)

@@ -93,11 +93,38 @@ class TestTransfersAggregate:
             sc.setLocalProperty("spark.jobGroup.id", None)
         assert len(sc.statusTracker().getJobIdsForGroup("transfers-jobs")) <= 2
 
+    def test_plan_starts_no_python_worker(self, spark, monkeypatch):
+        plans, cls = [], type(spark.range(1))  # the session's concrete DataFrame
+        collect = cls.collect
+
+        def spy(self):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return collect(self)
+
+        monkeypatch.setattr(cls, "collect", spy)
+        DataService(spark).get_transfer_data()
+        assert plans
+        for plan in plans:
+            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
     def test_payload_equals_the_three_aggregate_form(self, spark, monkeypatch):
         monkeypatch.setattr(data_service, "time",
                             types.SimpleNamespace(time=lambda: 1_700_000_000.0))
         svc = DataService(spark)
         assert _json(svc.get_transfer_data()) == _json(_three_aggregate_transfers(svc))
+
+
+@pytest.mark.parametrize("route", ["get_var_data", "get_mev_data"])
+def test_one_plan_route_runs_at_most_two_jobs(spark, route):
+    """/api/var and /api/mev each collect one plan with one shuffle."""
+    svc, sc = DataService(spark), spark.sparkContext
+    getattr(svc, route)()  # warm
+    sc.setJobGroup(f"{route}-jobs", route)
+    try:
+        getattr(svc, route)()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(f"{route}-jobs")) <= 2
 
 
 def _three_aggregate_transfers(svc):

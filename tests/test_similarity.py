@@ -287,8 +287,9 @@ def test_material_scope_releases_library_persists(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").limit(50)
-    before = len(M._SCOPED)
     with M.material_scope():
+        # entry releases whatever earlier callers left in the module scope
+        before = len(M._SCOPED)
         pairs = minhash_lsh_pairs(docs)
         n_inside = pairs.count()
         assert len(M._SCOPED) > before  # operators tracked their persists

@@ -70,6 +70,22 @@ class TestEngineer:
         out = engineer_transactions(_tx_df(spark, n=1)).collect()
         assert out[0]["is_high_priority"] is False
 
+    def test_p90_tie_keeps_the_tied_value(self, spark):
+        # The last row's frame sorts to [20, 30, 40, x, x]: the p90
+        # position 3.6 falls between the two x's, and the row itself is x.
+        # pandas returns x; the engines' a*(1-t) + b*t lands one ulp below
+        # this x, which would make the strict '>' true.
+        x, t = 457.250232866, 0.9 * 4 - 3
+        assert x * (1.0 - t) + x * t < x
+        msgs = [
+            make_transaction_message(gas_price_gwei=g, block_number=18_000_000 + i, nonce=i)
+            for i, g in enumerate([20.0, 30.0, 40.0, x, x])
+        ]
+        out = engineer_transactions(lift_transactions(events_df(spark, msgs))).collect()
+        last = max(out, key=lambda r: r["block_number"])
+        assert (last["gas_price_gwei"], last["gas_p90"]) == (x, x)
+        assert last["is_high_priority"] is False
+
 
 class TestAggregateByBlock:
     def test_counts_and_sums(self, spark):

@@ -10,8 +10,9 @@ from .hex import (
     eip55_checksum,
     fn_selector,
     hex_to_double,
+    hex_to_double_sql,
     hex_to_long,
-    topic_address,
+    hex_to_long_sql,
 )
 from .maps import TOKEN_STANDARDS, token_standards_col, token_standards_df
 
@@ -25,8 +26,9 @@ __all__ = [
     "eip55_checksum",
     "fn_selector",
     "hex_to_double",
+    "hex_to_double_sql",
     "hex_to_long",
-    "topic_address",
+    "hex_to_long_sql",
     "TOKEN_STANDARDS",
     "token_standards_col",
     "token_standards_df",

@@ -2,9 +2,15 @@
 
 SURVEY.md §2.10: after rewriting everything else to built-ins, the custom
 surface was (1) uint256-hex -> float64 and (2) EIP-55 checksumming. The
-first is now plain column algebra over ``conv`` and decimal casts that
-stays inside whole-stage codegen; only EIP-55 (keccak) remains a Python
-UDF, Arrow-batched (never row-at-a-time ``udf``).
+first is now plain SQL over ``conv`` and decimal casts that stays inside
+whole-stage codegen; only EIP-55 (keccak) remains a Python UDF,
+Arrow-batched (never row-at-a-time ``udf``).
+
+The decoders are SQL text (``hex_to_double_sql``/``hex_to_long_sql``) that
+a caller embeds in its own projection (``selectExpr``, ``F.expr``), with
+``hex_to_double``/``hex_to_long`` as the one-column form.  One parsed
+string costs one py4j call; the same tree built from ``functions`` calls
+costs one call per node, each with PySpark's call-site capture.
 
 Numeric semantics deliberately match the reference: token amounts are
 ``int(hex, 16)`` then degraded to float64 (reference etl_pipeline.py:97,129),
@@ -36,35 +42,43 @@ from .keccak import to_checksum_address as _checksum
 _TOP = 16  # nibbles conv turns into an exact unsigned 64-bit value
 
 
-def _digits(h: Column) -> tuple[Column, Column]:
-    """(well-formed?, significant hex digits without prefix or leading zeros)."""
-    body = F.regexp_replace(h, "^0[xX]", "")
-    return body.rlike("^[0-9a-fA-F]*$"), F.regexp_replace(body, "^0+", "")
+def _digits(h: str) -> tuple[str, str]:
+    """(hex digits without the prefix, the same without leading zeros)."""
+    body = f"regexp_replace({h}, '^0[xX]', '')"
+    return body, f"regexp_replace({body}, '^0+', '')"
 
 
-def hex_to_double(col: Column | str) -> Column:
-    """uint256 hex string -> float64, exactly ``float(int(h, 16))``."""
-    h = F.col(col) if isinstance(col, str) else col
-    ok, d = _digits(h)
-    n = F.length(d)
-    top = F.conv(F.substring(d, 1, _TOP), 16, 10).cast("decimal(20,0)")
-    sticky = d.rlike(f"^.{{{_TOP}}}.*[^0]") & (top % 2 == 0)
-    scale = F.pow(F.lit(2.0), F.greatest(n - _TOP, F.lit(0)) * 4)
-    return (
-        F.when(h.isNull() | (n == 0), F.lit(0.0))
-        .when(~ok, F.lit(float("nan")))
-        .otherwise((top + sticky.cast("int")).cast("double") * scale)
-    )
+def hex_to_double_sql(h: str) -> str:
+    """uint256 hex string -> float64, exactly ``float(int(h, 16))``; ``h``
+    and the result are SQL text."""
+    body, d = _digits(h)
+    top = f"CAST(conv(substring({d}, 1, {_TOP}), 16, 10) AS DECIMAL(20,0))"
+    sticky = f"{d} RLIKE '^.{{{_TOP}}}.*[^0]' AND {top} % 2 = 0"
+    return (f"CASE WHEN {h} IS NULL OR length({d}) = 0 THEN 0.0D"
+            f" WHEN NOT {body} RLIKE '^[0-9a-fA-F]*$' THEN double('NaN')"
+            f" ELSE CAST({top} + IF({sticky}, 1, 0) AS DOUBLE)"
+            f" * pow(2.0D, greatest(length({d}) - {_TOP}, 0) * 4) END")
 
 
-def hex_to_long(col: Column | str) -> Column:
+def hex_to_long_sql(h: str) -> str:
     """hex string -> int64 (token ids; reference etl_pipeline.py:86); NULL
-    when malformed or above int64."""
-    ok, d = _digits(F.col(col) if isinstance(col, str) else col)
-    n = F.length(d)
-    fits = (n < _TOP) | ((n == _TOP) & (F.substring(d, 1, 1) < "8"))
-    return F.when(ok & (n == 0), F.lit(0).cast("long")).when(
-        ok & fits, F.conv(d, 16, 10).cast("long"))
+    when malformed or above int64.  ``h`` and the result are SQL text."""
+    body, d = _digits(h)
+    ok = f"{body} RLIKE '^[0-9a-fA-F]*$'"
+    fits = f"length({d}) < {_TOP} OR (length({d}) = {_TOP} AND substring({d}, 1, 1) < '8')"
+    return (f"CASE WHEN {ok} AND length({d}) = 0 THEN 0L"
+            f" WHEN {ok} AND ({fits}) THEN CAST(conv({d}, 16, 10) AS BIGINT) END")
+
+
+def hex_to_double(h: str) -> Column:
+    """:func:`hex_to_double_sql` as a column; ``h`` is a SQL expression
+    (a column name is one)."""
+    return F.expr(hex_to_double_sql(h))
+
+
+def hex_to_long(h: str) -> Column:
+    """:func:`hex_to_long_sql` as a column; ``h`` is a SQL expression."""
+    return F.expr(hex_to_long_sql(h))
 
 
 @pandas_udf(StringType())
@@ -92,11 +106,6 @@ def eip55_checksum(s: pd.Series) -> pd.Series:
             return s.map(mapped)
         return eip55_checksum_batch(s)
     return s.map(lambda a: None if a is None else _checksum(a))
-
-
-def topic_address(topic: Column) -> Column:
-    """'0x' + last 40 hex chars of a 32-byte topic (etl_pipeline.py:81)."""
-    return F.concat(F.lit("0x"), F.substring(topic, -40, 40))
 
 
 def fn_selector(input_col: Column) -> Column:

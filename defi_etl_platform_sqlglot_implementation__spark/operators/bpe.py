@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .materialize import track
+from .materialize import lazy_persist
 
 
 def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -110,7 +110,7 @@ def train_bpe(
     engine regression to UTF-16-unit splitting would be caught."""
     seqs = _initial_sequences(word_frequencies(docs, text_col))
     # the word table is small (vocab-cardinality) and hit n_merges times
-    seqs = track(seqs.persist())
+    seqs = lazy_persist(seqs)
     seqs.count()
     merges: list[tuple[str, str, int]] = []
     # release schedule (r11 opt): each round's pair-count collect is the
@@ -136,7 +136,7 @@ def train_bpe(
             break
         a, b, cnt = top[0].a, top[0].b, int(top[0].n)
         merges.append((a, b, cnt))
-        nxt = track(seqs.withColumn("seq", F.expr(_merge_expr(a, b))).persist())
+        nxt = lazy_persist(seqs.withColumn("seq", F.expr(_merge_expr(a, b))))
         prev = seqs
         seqs = nxt
     if prev is not None:

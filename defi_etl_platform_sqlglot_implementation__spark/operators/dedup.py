@@ -30,12 +30,13 @@ from __future__ import annotations
 
 import warnings
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..sources.bronze import local_frame
-from .materialize import disk_ckpt, track
+from .materialize import disk_ckpt, lazy_persist
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BANDS = 16  # rows per band = 32/16 = 2
@@ -154,8 +155,9 @@ def _spread(docs: DataFrame, id_col: str,
     try:
         if len(docs.inputFiles()) >= n:
             return docs
-    except Exception:
-        pass
+    except Py4JJavaError as exc:  # the JVM could not list the plan's files
+        warnings.warn(f"_spread: inputFiles() probe failed, repartitioning: {exc}",
+                      RuntimeWarning, stacklevel=2)
     return docs.repartition(n, F.col(id_col))
 
 
@@ -476,11 +478,11 @@ def minhash_lsh_pairs(
     # per-doc distinct-shingle arrays, persisted: they feed the signature
     # explode AND both sides of candidate verification (3 plan branches —
     # uncached, Spark would re-run the shingling per branch; at 100 TB
-    # MEMORY_AND_DISK spills instead of recomputing the corpus scan).
-    arr = track(_spread(docs, id_col).select(
+    # DISK_ONLY spills instead of recomputing the corpus scan).
+    arr = lazy_persist(_spread(docs, id_col).select(
         F.col(id_col).alias("doc_id"),
         token_shingles(text_col, n).alias("sharr"),
-    ).persist())
+    ))
     sig = minhash_signatures(arr, num_hashes)
 
     band_cols = F.array(*[
@@ -492,10 +494,10 @@ def minhash_lsh_pairs(
     ])
     # persisted: the banded table is both sides of the bucket self-join —
     # uncached, the minhash signature map stage would run once per side.
-    banded = track(sig.select("doc_id", F.explode(band_cols).alias("bb")).select(
+    banded = lazy_persist(sig.select("doc_id", F.explode(band_cols).alias("bb")).select(
         "doc_id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket")
-    ).persist())
-    cand = track(
+    ))
+    cand = lazy_persist(
         banded.alias("a")
         .join(banded.alias("b"),
               (F.col("a.band") == F.col("b.band"))
@@ -503,7 +505,6 @@ def minhash_lsh_pairs(
               & (F.col("a.doc_id") < F.col("b.doc_id")))
         .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
         .distinct()
-        .persist()
     )
     # Exact-Jaccard verification per candidate pair via the cached shingle
     # arrays: two equi-joins on doc id + array_intersect — no shingle

@@ -28,10 +28,10 @@ training persist).
     that re-collects an old result after release merely recomputes;
     nothing can break.
 
-``track(df)``
-    Register a frame the caller persists itself, lazily or per loop
-    round; call it on the frame returned by ``persist()``, before any
-    action.
+``lazy_persist(df)``
+    Persist at the package level and register, without a fill: the
+    first action that reads the frame fills it (per-round loop frames,
+    the minhash banding tables).
 
 ``material_scope()``
     The same boundary for library consumers outside the registry (tests,
@@ -54,6 +54,7 @@ contents; only block lifetime and placement change.
 from __future__ import annotations
 
 import contextlib
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame
@@ -107,7 +108,7 @@ def scoped_persist_all(dfs: list[DataFrame]) -> list[DataFrame]:
     interrupted job, a raising expression) still leaves every persisted
     frame releasable at the next scope boundary; release of an unfilled
     frame merely recomputes from lineage."""
-    out = [track(df.persist(_LEVEL)) for df in dfs]
+    out = [lazy_persist(df) for df in dfs]
     if len(out) > 1:
         with ThreadPoolExecutor(max_workers=2) as pool:
             list(pool.map(lambda df: df.count(), out))
@@ -116,10 +117,11 @@ def scoped_persist_all(dfs: list[DataFrame]) -> list[DataFrame]:
     return out
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Register an already-persisted, not yet filled frame for release at
-    the next scope boundary — for call sites that choose their own
-    laziness (the minhash banding tables, BPE's per-round frames)."""
+def lazy_persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` at the package's DISK_ONLY level and register it for
+    release at the next scope boundary, leaving the fill to the first
+    action that reads it."""
+    df = df.persist(_LEVEL)
     _SCOPED.append(df)
     return df
 
@@ -127,16 +129,23 @@ def track(df: DataFrame) -> DataFrame:
 def release_scoped() -> int:
     """Unpersist every scoped frame from the PREVIOUS query.  Safe at any
     time: persisted (not checkpointed) frames keep their lineage, so a
-    late re-read recomputes instead of failing.  Returns the number of
-    frames released (soak-test observability)."""
-    n = 0
+    late re-read recomputes instead of failing.  A frame whose
+    SparkContext was stopped (a test fixture or a benchmark pass that
+    restarts its session) has no blocks left to release; it is dropped
+    with a ``RuntimeWarning`` that names the cause.  Any other unpersist
+    failure raises.  Returns the number of frames released (soak-test
+    observability)."""
+    n = stale = 0
     while _SCOPED:
         df = _SCOPED.pop()
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:
-            pass  # session already stopped — nothing to release
+        if df.sparkSession.sparkContext._jsc is None:  # stopped: its blocks went with it
+            stale += 1
+            continue
+        df.unpersist(blocking=False)
+        n += 1
+    if stale:
+        warnings.warn(f"release_scoped: {stale} frame(s) belong to a stopped SparkContext; "
+                      "nothing to unpersist", RuntimeWarning, stacklevel=2)
     return n
 
 
@@ -168,7 +177,7 @@ def material_scope():
     """Context manager bounding scoped-persist lifetimes for NON-registry
     consumers (tests, notebooks, library callers of e.g.
     ``ngram_jaccard_pairs`` / ``minhash_lsh_pairs``, whose internal
-    ``track``/``scoped_persist`` calls otherwise stay in the module
+    ``lazy_persist``/``scoped_persist`` calls otherwise stay in the module
     scope until the next top-level registry query drains it)::
 
         with material_scope():

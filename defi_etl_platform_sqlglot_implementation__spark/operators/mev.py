@@ -29,44 +29,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the number of distinct pools in the block's list with at least {k} swaps
+_POOLS_WITH = "size(filter(array_distinct(_pools), p -> size(filter(_pools, x -> x = p)) >= {k}))"
+
 
 def mev_scores(tx: DataFrame, swaps: DataFrame) -> DataFrame:
     """(tx: block_number, gas_price_gwei; swaps: block_number, pool)
-    -> mev_scores (SURVEY.md §1.4)."""
-    rows = tx.select("block_number", "gas_price_gwei", F.lit(True).alias("_tx")).unionByName(
-        swaps.select("block_number", "pool", F.lit(False).alias("_tx")),
-        allowMissingColumns=True)
-    blocks = rows.groupBy("block_number").agg(
-        F.max("gas_price_gwei").alias("gas_max"),
-        F.expr("percentile(gas_price_gwei, 0.5)").alias("gas_med"),
-        F.collect_list("pool").alias("_pools"),
-        F.bool_or("_tx").alias("_has_tx"),
-    ).where("_has_tx")
-
-    def pools_with(k: int):
-        return F.size(F.filter(
-            F.array_distinct("_pools"),
-            lambda p: F.size(F.filter("_pools", lambda x: x == p)) >= k))
-
-    sandwich = F.least(F.lit(100.0), pools_with(3).cast("double") * 25.0)
-    frontrun = F.when(
-        F.col("gas_med").isNull() | (F.col("gas_med") == 0.0), F.lit(0.0)
-    ).otherwise(
-        F.least(
-            F.lit(100.0),
-            F.greatest(F.lit(0.0), (F.col("gas_max") / F.col("gas_med") - 1.0) * 20.0),
-        )
-    )
-    backrun = pools_with(2).cast("long")
-
-    composite = F.least(
-        F.lit(100.0), sandwich * 0.5 + frontrun * 0.4 + backrun.cast("double") * 2.0
-    )
-
-    return blocks.select(
+    -> mev_scores (SURVEY.md §1.4).  Built from SQL text; the score refers
+    to the signals by their aliases (lateral column aliases)."""
+    rows = tx.selectExpr("block_number", "gas_price_gwei", "true AS _tx").unionByName(
+        swaps.selectExpr("block_number", "pool", "false AS _tx"), allowMissingColumns=True)
+    return rows.groupBy("block_number").agg(
+        F.expr("max(gas_price_gwei) AS gas_max"),
+        F.expr("percentile(gas_price_gwei, 0.5) AS gas_med"),
+        F.expr("collect_list(pool) AS _pools"),
+        F.expr("bool_or(_tx) AS _has_tx"),
+    ).where("_has_tx").selectExpr(
         "block_number",
-        F.round(composite, 2).alias("mev_score"),
-        F.round(sandwich, 2).alias("sandwich_risk"),
-        F.round(frontrun, 2).alias("frontrun_risk"),
-        backrun.alias("backrun_opportunities"),
-    )
+        f"least(100.0D, CAST({_POOLS_WITH.format(k=3)} AS DOUBLE) * 25.0D) AS _sandwich",
+        "CASE WHEN gas_med IS NULL OR gas_med = 0.0D THEN 0.0D"
+        " ELSE least(100.0D, greatest(0.0D, (gas_max / gas_med - 1.0D) * 20.0D)) END AS _frontrun",
+        f"CAST({_POOLS_WITH.format(k=2)} AS BIGINT) AS backrun_opportunities",
+        "round(least(100.0D, _sandwich * 0.5D + _frontrun * 0.4D"
+        " + CAST(backrun_opportunities AS DOUBLE) * 2.0D), 2) AS mev_score",
+        "round(_sandwich, 2) AS sandwich_risk",
+        "round(_frontrun, 2) AS frontrun_risk",
+    ).select("block_number", "mev_score", "sandwich_risk", "frontrun_risk",
+             "backrun_opportunities")

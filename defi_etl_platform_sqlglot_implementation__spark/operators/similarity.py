@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.bronze import local_frame
+from .materialize import lazy_persist
 
 # (centroid_id, embedding): the frame both k-means trainers return
 _CENTROIDS = "centroid_id long, embedding array<double>"
@@ -916,7 +917,7 @@ def kmeans_micro(
     lvl = embeddings.storageLevel
     we_persisted = not (lvl.useMemory or lvl.useDisk)
     if we_persisted:
-        embeddings = embeddings.persist()
+        embeddings = lazy_persist(embeddings)
     try:
         return _kmeans_micro_train(embeddings, k, iters, vec_col, id_col,
                                    scale)

@@ -26,13 +26,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hex import hex_to_double
+from ..functions.hex import hex_to_double_sql
 from ..functions.keccak import UNISWAP_V2_SWAP_TOPIC
 
-
-def _slot(data: Column, k: int) -> Column:
-    """k-th 32-byte ABI slot of 0x-prefixed calldata as float64."""
-    return hex_to_double(F.substring(data, 3 + 64 * k, 64))
+_SLOTS = ("amount0_in", "amount1_in", "amount0_out", "amount1_out")
 
 
 def swap_price(a0i: Column, a1i: Column, a0o: Column, a1o: Column) -> Column:
@@ -45,53 +42,33 @@ def swap_price(a0i: Column, a1i: Column, a0o: Column, a1o: Column) -> Column:
 
 
 def parse_swaps(events: DataFrame) -> DataFrame:
-    """events (envelope schema) -> defi_swaps (SURVEY.md §1.4)."""
-    p = F.col("payload")
-    topics = p["topics"]
-
-    base = (
-        events.filter(topics.isNotNull() & (F.size(topics) >= 1))
-        .filter(F.try_element_at(topics, F.lit(1)) == F.lit(UNISWAP_V2_SWAP_TOPIC))
-        .filter(p["data"].isNotNull() & (F.length(p["data"]) >= 2 + 64 * 4))
-    )
-
-    data = p["data"]
+    """events (envelope schema) -> defi_swaps (SURVEY.md §1.4).  The filter
+    and the slot decode are SQL text, like ``decode_transfers``."""
     # both-denominators-zero drop (reference ZeroDivisionError path, :159)
     # tested on the RAW hex slots: a uint256 slot decodes to 0.0 iff every
     # hex digit is '0'. Doing this as a string predicate BEFORE the
     # projection means the decode below runs exactly once per surviving
     # row — a filter on the decoded columns would be pushed below the
     # projection with the decode inlined, decoding slots 0/1 twice.
-    base = base.filter(
-        ~(
-            F.substring(data, 3, 64).rlike("^0{64}$")
-            & F.substring(data, 67, 64).rlike("^0{64}$")
-        )
+    base = events.where(
+        "payload.topics IS NOT NULL AND size(payload.topics) >= 1"
+        f" AND try_element_at(payload.topics, 1) = '{UNISWAP_V2_SWAP_TOPIC}'"
+        f" AND payload.data IS NOT NULL AND length(payload.data) >= {2 + 64 * 4}"
+        " AND NOT (substring(payload.data, 3, 64) RLIKE '^0{64}$'"
+        " AND substring(payload.data, 67, 64) RLIKE '^0{64}$')"
     )
-    parsed = base.select(
-        F.lit("uniswap_v2").alias("protocol"),
-        p["contract"].alias("pool"),
-        _slot(data, 0).alias("amount0_in"),
-        _slot(data, 1).alias("amount1_in"),
-        _slot(data, 2).alias("amount0_out"),
-        _slot(data, 3).alias("amount1_out"),
-        F.col("block_number"),
-        F.timestamp_seconds(F.col("block_timestamp")).alias("block_timestamp"),
-        F.col("chain_id"),
-        F.coalesce(p["tx_hash"], F.lit("")).alias("tx_hash"),
+    # the k-th 32-byte ABI slot of the 0x-prefixed data, as float64
+    parsed = base.selectExpr(
+        "'uniswap_v2' AS protocol",
+        "payload.contract AS pool",
+        *[f"{hex_to_double_sql(f'substring(payload.data, {3 + 64 * k}, 64)')} AS {name}"
+          for k, name in enumerate(_SLOTS)],
+        "block_number",
+        "timestamp_seconds(block_timestamp) AS block_timestamp",
+        "chain_id",
+        "coalesce(payload.tx_hash, '') AS tx_hash",
     )
-
-    return (
-        parsed.withColumn(
-            "price",
-            swap_price(
-                F.col("amount0_in"), F.col("amount1_in"),
-                F.col("amount0_out"), F.col("amount1_out"),
-            ),
-        )
-        .select(
-            "protocol", "pool", "amount0_in", "amount1_in", "amount0_out",
-            "amount1_out", "price", "block_number", "block_timestamp",
-            "chain_id", "tx_hash",
-        )
+    return parsed.select(
+        "protocol", "pool", *_SLOTS, swap_price(*[F.col(c) for c in _SLOTS]).alias("price"),
+        "block_number", "block_timestamp", "chain_id", "tx_hash",
     )

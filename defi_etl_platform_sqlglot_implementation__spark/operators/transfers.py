@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hex import eip55_checksum, hex_to_double, hex_to_long, topic_address
+from ..functions.hex import eip55_checksum, hex_to_double_sql, hex_to_long_sql
 from ..functions.keccak import ERC20_TRANSFER_TOPIC
 
 
@@ -32,32 +32,27 @@ def decode_transfers(events: DataFrame, checksum: bool = True) -> DataFrame:
 
     ``checksum=False`` skips EIP-55 (keeps addresses lowercase) for
     oracle comparisons where mixed-casing is cosmetic (SURVEY.md §2.10).
+    The filter and the projection are SQL text: one parse each, not one
+    py4j call per expression node.
     """
-    p = F.col("payload")
-    topics = p["topics"]
-
-    base = (
-        events.filter(F.col("event_type").isin("token_transfer", "log"))
-        .filter(topics.isNotNull() & (F.size(topics) >= 3))
-        .filter(F.try_element_at(topics, F.lit(1)) == F.lit(ERC20_TRANSFER_TOPIC))
+    is_721 = "size(payload.topics) >= 4"
+    out = events.where(
+        "event_type IN ('token_transfer', 'log') AND payload.topics IS NOT NULL"
+        " AND size(payload.topics) >= 3"
+        f" AND try_element_at(payload.topics, 1) = '{ERC20_TRANSFER_TOPIC}'"
+    ).selectExpr(
+        f"IF({is_721}, 'ERC-721', 'ERC-20') AS standard",
+        "payload.contract AS contract",
+        # '0x' + the last 40 hex chars of the 32-byte topic (etl_pipeline.py:81)
+        "concat('0x', substring(try_element_at(payload.topics, 2), -40, 40)) AS `from`",
+        "concat('0x', substring(try_element_at(payload.topics, 3), -40, 40)) AS `to`",
+        f"IF({is_721}, {hex_to_long_sql('try_element_at(payload.topics, 4)')}, NULL) AS token_id",
+        f"IF({is_721}, 1.0D, {hex_to_double_sql('payload.data')}) AS amount",
+        "block_number",
+        "timestamp_seconds(block_timestamp) AS block_timestamp",
+        "payload.tx_hash AS tx_hash",
+        "chain_id",
     )
-
-    is_721 = F.size(topics) >= 4
-    from_addr = topic_address(F.try_element_at(topics, F.lit(2)))
-    to_addr = topic_address(F.try_element_at(topics, F.lit(3)))
     if checksum:
-        from_addr = eip55_checksum(from_addr)
-        to_addr = eip55_checksum(to_addr)
-
-    return base.select(
-        F.when(is_721, F.lit("ERC-721")).otherwise(F.lit("ERC-20")).alias("standard"),
-        p["contract"].alias("contract"),
-        from_addr.alias("from"),
-        to_addr.alias("to"),
-        F.when(is_721, hex_to_long(F.try_element_at(topics, F.lit(4)))).alias("token_id"),
-        F.when(is_721, F.lit(1.0)).otherwise(hex_to_double(p["data"])).alias("amount"),
-        F.col("block_number"),
-        F.timestamp_seconds(F.col("block_timestamp")).alias("block_timestamp"),
-        p["tx_hash"].alias("tx_hash"),
-        F.col("chain_id"),
-    )
+        out = out.withColumns({c: eip55_checksum(F.col(c)) for c in ("from", "to")})
+    return out

@@ -11,7 +11,6 @@ materialized until the caller acts.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .operators.swaps import parse_swaps
 from .operators.transfers import decode_transfers
@@ -30,13 +29,11 @@ def lift_transactions(events: DataFrame) -> DataFrame:
     """
     from .schemas import TRANSACTION_PAYLOAD
 
-    tx = events.filter(F.col("event_type") == "transaction")
-    available = set(tx.schema["payload"].dataType.fieldNames())
-    payload_fields = [f.name for f in TRANSACTION_PAYLOAD if f.name in available]
-    return tx.select(
-        *[F.col("payload")[f].alias(f) for f in payload_fields],
+    available = set(events.schema["payload"].dataType.fieldNames())
+    return events.where("event_type = 'transaction'").selectExpr(
+        *[f"payload.`{f.name}` AS `{f.name}`" for f in TRANSACTION_PAYLOAD if f.name in available],
         "block_number",
-        F.timestamp_seconds(F.col("block_timestamp")).alias("block_timestamp"),
+        "timestamp_seconds(block_timestamp) AS block_timestamp",
         "chain_id",
     )
 

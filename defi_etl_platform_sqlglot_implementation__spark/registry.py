@@ -13,7 +13,12 @@ The driver hash-compares Spark vs DuckDB values. Three classes:
    printf-style formatting on BOTH engines. printf rounds the true binary
    value (unlike Spark's ``round``, which rounds the shortest decimal repr),
    so a 1-ulp cross-engine difference flips the 7th significant digit with
-   probability ~1e-9 instead of breaking the hash.
+   probability ~1e-9 instead of breaking the hash.  The Spark side is
+   :func:`fmt`, one inline JVM expression that equals DuckDB's (and
+   Python's) half-even ``%.6e`` exactly: Java's HALF_UP ``format_string``
+   where it cannot differ, the exact ``BigDecimal`` expansion rounded
+   half-even on the near-tie and subnormal rows where it could.  It is
+   applied to a named column in the frame's last projection.
 3. **Not comparable** (genuinely engine-specific): no oracle (rows-only).
 
 Every query aliases computed columns identically on both sides.
@@ -25,12 +30,10 @@ import os
 import weakref
 from collections.abc import Callable
 
-import pandas as pd
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import LongType, StringType, TimestampNTZType
+from pyspark.sql.types import LongType, TimestampNTZType
 
 from .sources.bronze import local_frame
 
@@ -129,23 +132,47 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-@pandas_udf(StringType())
-def _fmt6(s: pd.Series) -> pd.Series:
-    # Python's float formatting is correctly rounded with round-half-even
-    # ties — identical to DuckDB's printf. Java's format_string is HALF_UP,
-    # which diverges on the exact ties that 2-decimal money data hits
-    # constantly; hence a (post-aggregation, tiny-cardinality) pandas UDF.
-    return s.map(lambda v: None if pd.isna(v) else f"{v:.6e}")
+# ``%.6e`` of the double {x}, equal to Python's correctly rounded (half-even)
+# ``f"{v:.6e}"``.  Java's ``format_string`` rounds HALF_UP on the <= 17
+# digits it prints for a double, which lie within an ulp of the exact
+# value, so it is correct unless those digits sit on the 7-digit rounding
+# boundary: digits 8-11 of the 11-digit form read 4999 or 5000, or the
+# double is subnormal (fewer bits than digits).  Those rows round the
+# exact binary expansion (``scala.math.BigDecimal.exact``) half-even at 7
+# significant digits -- the first 8 digits plus a sticky digit, ``bround``
+# to hundreds -- and spell out the mantissa and exponent by hand.
+_FMT6 = """CASE
+ WHEN {x} IS NULL OR isnan({x}) THEN NULL
+ WHEN abs({x}) = double('inf') THEN IF({x} > 0, 'inf', '-inf')
+ WHEN ({x} = 0 OR abs({x}) >= 2.2250738585072014E-308)
+  AND substr(format_string('%.10e', abs({x})), 9, 4) NOT IN ('4999', '5000')
+ THEN format_string('%.6e', {x})
+ ELSE concat(IF({x} < 0, '-', ''),
+  transform(array(reflect('scala.math.BigDecimal', 'exact', abs({x}))), s -> transform(array(
+   named_struct(
+    'd', TRIM(LEADING '0' FROM replace(substring_index(s, 'E', 1), '.', '')),
+    'e', IF(instr(s, 'E') > 0, int(substring_index(s, 'E', -1)), 0)
+         + length(substring_index(substring_index(s, 'E', 1), '.', 1)) - 1
+         - length(replace(substring_index(s, 'E', 1), '.', ''))
+         + length(TRIM(LEADING '0' FROM replace(substring_index(s, 'E', 1), '.', ''))))), p ->
+   transform(array(string(bround(CAST(concat(rpad(p.d, 8, '0'),
+     IF(TRIM(TRAILING '0' FROM substr(p.d, 9)) = '', '0', '1')) AS BIGINT), -2) div 100)), l ->
+   format_string('%s.%se%+03d', substr(l, 1, 1), substr(l, 2, 6), p.e + length(l) - 7)
+  )[0])[0])[0])
+END"""
 
 
-def fmt(c: Column | str) -> Column:
-    """%.6e emission for near-exact doubles (policy class 2)."""
-    col = c if isinstance(c, Column) else F.col(c)
-    return _fmt6(col.cast("double"))
+def fmt(name: str) -> Column:
+    """``%.6e`` emission for near-exact doubles (policy class 2): the
+    double column ``name`` formatted and named ``name``, in the frame's
+    last projection.  One inline JVM expression: NaN and NULL give NULL,
+    infinities ``inf``/``-inf``, ``-0.0`` keeps its sign."""
+    return F.expr(f"{_FMT6.format(x=f'CAST(`{name}` AS DOUBLE)')} AS `{name}`")
 
 
-def cents(c: Column | str) -> Column:
-    """Exact long-cents conversion for 2-decimal money stored as double.
+def cents(c: str) -> Column:
+    """Exact long-cents conversion for 2-decimal money stored as double,
+    over the SQL expression ``c`` (a column name or SQL text).
 
     The true value is an integer number of cents, so ``round(x*100)`` is
     exact while ``x*100`` sits below 2**53 — i.e. |x| < ~9e13 dollars per
@@ -160,8 +187,14 @@ def cents(c: Column | str) -> Column:
     ``CAST(round(x*100) AS BIGINT)`` (DuckDB sums BIGINT into HUGEINT, so
     the oracle side never overflows).
     """
-    col = c if isinstance(c, Column) else F.col(c)
-    return F.round(col * 100).cast("long")
+    return F.expr(cents_sql(c))
+
+
+def cents_sql(c: str) -> str:
+    """:func:`cents` as SQL text over the SQL expression ``c``: the one
+    place the rounding rule is spelled.  ``c`` is parenthesized, so a
+    compound expression (``a + b``) is scaled as a whole."""
+    return f"CAST(round(({c}) * 100) AS BIGINT)"
 
 
 # =========================================================================
@@ -182,18 +215,13 @@ def cents(c: Column | str) -> Column:
     """,
 )
 def transfer_volume_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = t(spark, sf_dir, "events")
     return (
-        ev.filter(F.col("event_type").isin("purchase", "click"))
-        .groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour_bucket"),
-            "event_type",
-        )
-        .agg(
-            F.count("*").alias("transfer_count"),
-            fmt(F.sum("value")).alias("volume"),
-            F.countDistinct("user_id").alias("unique_users"),
-        )
+        t(spark, sf_dir, "events").where("event_type IN ('purchase', 'click')")
+        .groupBy(F.expr("date_format(date_trunc('hour', ts), 'yyyy-MM-dd HH:mm:ss') AS hour_bucket"),
+                 "event_type")
+        .agg(F.expr("count(*) AS transfer_count"), F.expr("sum(value) AS volume"),
+             F.expr("count(DISTINCT user_id) AS unique_users"))
+        .withColumn("volume", fmt("volume"))
     )
 
 
@@ -239,7 +267,7 @@ def swap_price_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     can never overflow the accumulator."""
     li = t(spark, sf_dir, "lineitem")
     pc = cents("l_extendedprice")
-    vc = cents(F.col("l_extendedprice") + F.col("l_tax"))
+    vc = cents("l_extendedprice + l_tax")
     out = (
         li.groupBy(F.col("l_partkey").alias("pool"))
         .agg(
@@ -254,12 +282,12 @@ def swap_price_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1 = F.col("_s1").cast("double") / 100.0
     return out.select(
         "pool",
-        fmt(s1 / n).alias("avg_price"),
-        fmt(F.sqrt((F.col("_s2").cast("double") / 10000.0 - s1 * s1 / n)
-                   / (n - 1))).alias("price_volatility"),
-        fmt(F.col("_sv").cast("double") / 100.0).alias("total_volume"),
+        (s1 / n).alias("avg_price"),
+        F.sqrt((F.col("_s2").cast("double") / 10000.0 - s1 * s1 / n)
+               / (n - 1)).alias("price_volatility"),
+        (F.col("_sv").cast("double") / 100.0).alias("total_volume"),
         "swap_count",
-    )
+    ).withColumns({c: fmt(c) for c in ("avg_price", "price_volatility", "total_volume")})
 
 
 # =========================================================================
@@ -292,12 +320,12 @@ def block_agg_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("o_orderdate", "yyyy-MM-dd").alias("order_date")
     ).agg(
         F.count("*").alias("tx_count"),
-        fmt(F.sum(c).cast("double") / 100.0).alias("total_volume"),
-        fmt(F.sum(c).cast("double") / 100.0 / F.count("*")).alias("avg_price"),
-        fmt(F.max("o_totalprice")).alias("max_price"),
+        (F.sum(c).cast("double") / 100.0).alias("total_volume"),
+        (F.sum(c).cast("double") / 100.0 / F.count("*")).alias("avg_price"),
+        F.max("o_totalprice").alias("max_price"),
         F.sum((F.col("o_orderstatus") == "F").cast("long")).alias("filled_count"),
         F.sum(F.col("o_orderpriority").startswith("1").cast("long")).alias("urgent_count"),
-    )
+    ).withColumns({c: fmt(c) for c in ("total_volume", "avg_price", "max_price")})
 
 
 # =========================================================================
@@ -366,8 +394,8 @@ def hour_spine_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spine.join(agg, "hour", "left").select(
         F.date_format("hour", "yyyy-MM-dd HH:mm:ss").alias("hour"),
         F.coalesce(F.col("n"), F.lit(0)).alias("purchase_count"),
-        fmt(F.coalesce(F.col("vol"), F.lit(0.0))).alias("volume"),
-    )
+        F.coalesce(F.col("vol"), F.lit(0.0)).alias("volume"),
+    ).withColumn("volume", fmt("volume"))
 
 
 # =========================================================================
@@ -396,8 +424,9 @@ def region_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("r_name").alias("region"))
         .agg(
             F.count("*").alias("customer_count"),
-            fmt(F.sum(cents("c_acctbal")).cast("double") / 100.0).alias("total_acctbal"),
+            (F.sum(cents("c_acctbal")).cast("double") / 100.0).alias("total_acctbal"),
         )
+        .withColumn("total_acctbal", fmt("total_acctbal"))
     )
 
 
@@ -518,7 +547,7 @@ def rolling_p90(spark: SparkSession, sf_dir: str) -> DataFrame:
         o.select("o_orderkey", "o_totalprice"), ["o_orderkey"],
         "o_totalprice", 0.9, 100, out="p90_raw",
     )
-    return out.select("o_orderkey", fmt("p90_raw").alias("p90"))
+    return out.selectExpr("o_orderkey", "p90_raw AS p90").withColumn("p90", fmt("p90"))
 
 
 # =========================================================================
@@ -543,8 +572,8 @@ def rolling_var_minperiods(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = F.count("value").over(w)
     return ev.select(
         "event_id",
-        F.when(cnt >= 15, fmt(F.lit(-1e6) * q)).alias("rolling_var"),
-    )
+        F.when(cnt >= 15, F.lit(-1e6) * q).alias("rolling_var"),
+    ).withColumn("rolling_var", fmt("rolling_var"))
 
 
 @register(
@@ -571,7 +600,7 @@ def rolling_var_minperiods_partitioned(spark: SparkSession, sf_dir: str) -> Data
         order_cols=["event_id"], value_col="r", window=30,
         confidence=0.95, position_size=1e6, partition_col="_series",
     )
-    return out.select("event_id", fmt("rolling_var").alias("rolling_var"))
+    return out.select("event_id", fmt("rolling_var"))
 
 
 # =========================================================================
@@ -611,7 +640,7 @@ def rolling_var_cvar_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx_col="event_id", value_col="r", window=30,
         confidence=0.95, position_size=1.0,
     )
-    return out.select("event_id", fmt("var").alias("var"), fmt("cvar").alias("cvar"))
+    return out.select("event_id", fmt("var"), fmt("cvar"))
 
 
 @register(
@@ -657,9 +686,7 @@ def rolling_var_cvar_partitioned_q(spark: SparkSession, sf_dir: str) -> DataFram
         idx_col="event_id", value_col="r", window=30,
         confidence=0.95, position_size=1.0, partition_col="series",
     )
-    return out.select(
-        "series", "event_id", fmt("var").alias("var"), fmt("cvar").alias("cvar")
-    )
+    return out.select("series", "event_id", fmt("var"), fmt("cvar"))
 
 
 # =========================================================================
@@ -685,7 +712,7 @@ def var_cvar_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events").select(F.col("value").alias("r"))
     out = var_cvar(ev, value_col="r", confidence=0.95, position_size=1e6)
     return out.select(
-        "confidence", fmt("var").alias("var"), fmt("cvar").alias("cvar"),
+        "confidence", fmt("var"), fmt("cvar"),
         "returns_used", "method",
     )
 
@@ -779,37 +806,27 @@ def il_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mev_scores_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = t(spark, sf_dir, "lineitem")
-    tx = li.select(
-        F.col("l_orderkey").alias("block_number"),
-        (F.col("l_extendedprice") / 1e3).alias("gas_price_gwei"),
+    """One aggregate per block, the shape of ``operators/mev.mev_scores``:
+    the gas max and median, and the block's pool list, whose per-pool
+    counts come from higher-order functions -- one shuffle, where the
+    oracle's form groups three times and joins."""
+    from .operators.mev import _POOLS_WITH
+
+    blocks = t(spark, sf_dir, "lineitem").groupBy("l_orderkey").agg(
+        F.expr("max(l_extendedprice / 1e3) AS gmax"),
+        F.expr("percentile(l_extendedprice / 1e3, 0.5) AS gmed"),
+        F.expr("collect_list(l_suppkey) AS _pools"),
     )
-    swaps = li.select(
-        F.col("l_orderkey").alias("block_number"),
-        F.col("l_suppkey").alias("pool"),
-    )
-    ta = tx.groupBy("block_number").agg(
-        F.max("gas_price_gwei").alias("gmax"),
-        F.expr("percentile(gas_price_gwei, 0.5)").alias("gmed"),
-    )
-    pc = swaps.groupBy("block_number", "pool").agg(F.count("*").alias("n"))
-    sa = pc.groupBy("block_number").agg(
-        F.sum((F.col("n") >= 3).cast("long")).alias("high"),
-        F.sum((F.col("n") >= 2).cast("long")).alias("back"),
-    )
-    j = ta.join(sa, "block_number", "left")
-    sandwich = F.least(F.lit(1e2), F.coalesce(F.col("high"), F.lit(0)) * 2.5e1)
-    frontrun = F.when(F.col("gmed") == 0e0, F.lit(0e0)).otherwise(
-        F.least(F.lit(1e2), F.greatest(F.lit(0e0), (F.col("gmax") / F.col("gmed") - 1) * 2e1))
-    )
-    backrun = F.coalesce(F.col("back"), F.lit(0))
-    return j.select(
-        "block_number",
-        fmt(F.least(F.lit(1e2), sandwich * 5e-1 + frontrun * 4e-1 + backrun * 2e0)).alias("mev_score"),
-        fmt(sandwich).alias("sandwich_risk"),
-        fmt(frontrun).alias("frontrun_risk"),
-        backrun.alias("backrun_opportunities"),
-    )
+    return blocks.selectExpr(
+        "l_orderkey AS block_number",
+        f"least(1e2, {_POOLS_WITH.format(k=3)} * 2.5e1) AS sandwich_risk",
+        "CASE WHEN gmed = 0e0 THEN 0e0"
+        " ELSE least(1e2, greatest(0e0, (gmax / gmed - 1) * 2e1)) END AS frontrun_risk",
+        f"CAST({_POOLS_WITH.format(k=2)} AS BIGINT) AS backrun_opportunities",
+        "least(1e2, sandwich_risk * 5e-1 + frontrun_risk * 4e-1"
+        " + backrun_opportunities * 2e0) AS mev_score",
+    ).select("block_number", fmt("mev_score"), fmt("sandwich_risk"), fmt("frontrun_risk"),
+             "backrun_opportunities")
 
 
 # =========================================================================
@@ -849,11 +866,11 @@ def summary_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t(spark, sf_dir, "events")
     return ev.agg(
         F.count("*").alias("n"),
-        fmt(F.avg("value")).alias("avg_value"),
-        fmt(F.max("value")).alias("max_value"),
-        fmt(F.sum("value")).alias("total_value"),
+        F.avg("value").alias("avg_value"),
+        F.max("value").alias("max_value"),
+        F.sum("value").alias("total_value"),
         F.sum((F.col("value") > 1e2).cast("long")).alias("n_large"),
-    )
+    ).withColumns({c: fmt(c) for c in ("avg_value", "max_value", "total_value")})
 
 
 # =========================================================================
@@ -1027,21 +1044,20 @@ def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups span the whole table and a BIGINT Σ of ~1e9-scale products
     would overflow around 1e10 rows.  Averages divide the exact sum by
     the count in double space (same operands → same result)."""
-    li = t(spark, sf_dir, "lineitem")
-    pc = cents("l_extendedprice")
-    dc = cents("l_discount")
-    cnt = F.count("*")
+    pc, dc = cents_sql("l_extendedprice"), cents_sql("l_discount")
     return (
-        li.filter(F.col("l_shipdate") <= F.lit("2024-11-01 00:00:00").cast("timestamp"))
+        t(spark, sf_dir, "lineitem").where("l_shipdate <= TIMESTAMP '2024-11-01 00:00:00'")
         .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum("l_quantity").alias("sum_qty"),
-            fmt(F.sum(pc).cast("double") / 100.0).alias("sum_base_price"),
-            fmt(F.sum((pc * (F.lit(100) - dc)).cast("decimal(38,0)"))
-                .cast("double") / 10000.0).alias("sum_disc_price"),
-            fmt(F.sum("l_quantity") / cnt).alias("avg_qty"),
-            fmt(F.sum(pc).cast("double") / 100.0 / cnt).alias("avg_price"),
-            fmt(F.sum(dc).cast("double") / 100.0 / cnt).alias("avg_disc"),
-            F.count("*").alias("count_order"),
-        )
+        .agg(*[F.expr(e) for e in (
+            "sum(l_quantity) AS sum_qty",
+            f"CAST(sum({pc}) AS DOUBLE) / 100.0D AS sum_base_price",
+            f"CAST(sum(CAST({pc} * (100 - {dc}) AS DECIMAL(38,0))) AS DOUBLE) / 10000.0D"
+            " AS sum_disc_price",
+            "sum(l_quantity) / count(*) AS avg_qty",
+            f"CAST(sum({pc}) AS DOUBLE) / 100.0D / count(*) AS avg_price",
+            f"CAST(sum({dc}) AS DOUBLE) / 100.0D / count(*) AS avg_disc",
+            "count(*) AS count_order",
+        )])
+        .withColumns({c: fmt(c) for c in (
+            "sum_base_price", "sum_disc_price", "avg_qty", "avg_price", "avg_disc")})
     )

@@ -276,8 +276,8 @@ def pagerank_nation_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = pagerank(edges, iterations=5, damping=0.85)
     return out.select(
         F.col("node").cast("long").alias("nation_key"),
-        fmt("score").alias("pagerank"),
-    )
+        F.col("score").alias("pagerank"),
+    ).withColumn("pagerank", fmt("pagerank"))
 
 
 __all__ = ["QUERIES", "ORACLES"]

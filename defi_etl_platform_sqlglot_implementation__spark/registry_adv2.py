@@ -219,21 +219,16 @@ def winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.groupBy("flag", "lo", "hi")
         .agg(
-            (F.sum(cents(F.least(F.greatest(F.col("x"), F.col("lo")),
-                             F.col("hi"))))
+            (F.sum(cents("least(greatest(x, lo), hi)"))
              .cast("double") / 100.0 / F.count("*")).alias("_wm"),
             F.sum(
                 F.when((F.col("x") < F.col("lo")) | (F.col("x") > F.col("hi")), 1)
                 .otherwise(0)
             ).cast("long").alias("n_clamped"),
         )
-        .select(
-            F.col("flag").alias("returnflag"),
-            fmt("lo").alias("p05"),
-            fmt("hi").alias("p95"),
-            fmt("_wm").alias("winsorized_mean"),
-            "n_clamped",
-        )
+        .selectExpr("flag AS returnflag", "lo AS p05", "hi AS p95",
+                    "_wm AS winsorized_mean", "n_clamped")
+        .withColumns({c: fmt(c) for c in ("p05", "p95", "winsorized_mean")})
     )
 
 
@@ -535,13 +530,13 @@ def column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("o_orderstatus").alias("mx_status"),
         F.count("o_totalprice").cast("long").alias("nn_price"),
         F.countDistinct("o_totalprice").cast("long").alias("nd_price"),
-        fmt(F.min("o_totalprice")).alias("mn_price"),
-        fmt(F.max("o_totalprice")).alias("mx_price"),
+        F.min("o_totalprice").alias("mn_price"),
+        F.max("o_totalprice").alias("mx_price"),
         F.count("o_orderdate").cast("long").alias("nn_date"),
         F.countDistinct("o_orderdate").cast("long").alias("nd_date"),
         F.date_format(F.min("o_orderdate"), "yyyy-MM-dd").alias("mn_date"),
         F.date_format(F.max("o_orderdate"), "yyyy-MM-dd").alias("mx_date"),
-    )
+    ).withColumns({c: fmt(c) for c in ("mn_price", "mx_price")})
     return agg.selectExpr(
         """stack(4,
            'o_orderkey',    n - nn_orderkey, nd_orderkey, mn_orderkey, mx_orderkey,
@@ -854,8 +849,8 @@ def value_time_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "event_type",
         F.col("_n").cast("long").alias("n"),
-        fmt(num / F.sqrt(varx) / F.sqrt(vary)).alias("pearson_r"),
-    )
+        (num / F.sqrt(varx) / F.sqrt(vary)).alias("pearson_r"),
+    ).withColumn("pearson_r", fmt("pearson_r"))
 
 
 @register(
@@ -964,13 +959,11 @@ def ols_value_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sums.select(
         "event_type",
         F.col("_n").cast("long").alias("n"),
-        fmt(slope).alias("slope_centi_per_s"),
-        fmt(
-            (F.col("_sx").cast("double") - slope * F.col("_sy").cast("double"))
-            / F.col("_n").cast("double")
-        ).alias("intercept_centi"),
-        fmt(num * num / varx / vary).alias("r_squared"),
-    )
+        slope.alias("slope_centi_per_s"),
+        ((F.col("_sx").cast("double") - slope * F.col("_sy").cast("double"))
+         / F.col("_n").cast("double")).alias("intercept_centi"),
+        (num * num / varx / vary).alias("r_squared"),
+    ).withColumns({c: fmt(c) for c in ("slope_centi_per_s", "intercept_centi", "r_squared")})
 
 
 # =========================================================================
@@ -1043,14 +1036,11 @@ def orders_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     def sig(df: DataFrame, key_alias: str) -> DataFrame:
         return df.select(
             F.col("o_orderkey").alias(key_alias),
-            # fmt (printf half-even), NOT format_string: Java's HALF_UP
-            # diverges from DuckDB printf exactly on the decimal ties
-            # 2-decimal money hits constantly (registry float policy)
+            # fmt (printf half-even), NOT a bare format_string: Java's
+            # HALF_UP diverges from DuckDB printf exactly on the decimal
+            # ties 2-decimal money hits constantly (registry float policy)
             F.md5(
-                F.concat(
-                    F.col("o_orderstatus"), F.lit("|"),
-                    fmt(F.col("o_totalprice")),
-                )
+                F.concat(F.col("o_orderstatus"), F.lit("|"), fmt("o_totalprice"))
             ).alias(f"_sig_{key_alias}"),
         )
 

@@ -857,7 +857,7 @@ def rolling_p90_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         o, (F.col("o_orderkey") / 1000).cast("long"), ["o_orderkey"],
         "o_totalprice", 0.9, 100, out="p90_raw",
     )
-    return out.select("o_orderkey", fmt("p90_raw").alias("p90"))
+    return out.selectExpr("o_orderkey", "p90_raw AS p90").withColumn("p90", fmt("p90"))
 
 
 @register(
@@ -999,7 +999,7 @@ def hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev.createOrReplaceTempView("_ev_rollup")
     out = spark.sql("""
         SELECT date_trunc('hour', ts) AS h, date_trunc('day', ts) AS d,
-               COUNT(*) AS n, SUM(value) AS total_raw
+               COUNT(*) AS n, SUM(value) AS total_value
         FROM _ev_rollup
         GROUP BY GROUPING SETS (
             (date_trunc('hour', ts), date_trunc('day', ts)),
@@ -1010,7 +1010,7 @@ def hourly_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         F.coalesce(F.date_format("h", "yyyy-MM-dd HH:mm:ss"), F.lit("ALL")).alias("hour_bucket"),
         F.coalesce(F.date_format("d", "yyyy-MM-dd"), F.lit("ALL")).alias("day_bucket"),
-        "n", fmt("total_raw").alias("total_value"),
+        "n", fmt("total_value"),
     )
 
 

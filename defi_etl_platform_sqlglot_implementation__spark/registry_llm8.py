@@ -252,8 +252,8 @@ def spearman_len_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
           - F.col("sb") * F.col("sb")).cast("double")
     return m.select(
         F.col("n").cast("long").alias("n"),
-        fmt(num / F.sqrt(va) / F.sqrt(vb)).alias("spearman_rho"),
-    )
+        (num / F.sqrt(va) / F.sqrt(vb)).alias("spearman_rho"),
+    ).withColumn("spearman_rho", fmt("spearman_rho"))
 
 
 # =========================================================================

@@ -79,7 +79,8 @@ def avg_yearly_small_qty(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.join(limits, "l_partkey")
         .filter(F.col("l_quantity") < F.col("qty_limit"))
-        .agg(fmt(F.sum(cents("l_extendedprice")).cast("double") / 100.0 / F.lit(7.0)).alias("avg_yearly"))
+        .agg((F.sum(cents("l_extendedprice")).cast("double") / 100.0 / F.lit(7.0)).alias("avg_yearly"))
+        .withColumn("avg_yearly", fmt("avg_yearly"))
     )
 
 
@@ -126,11 +127,11 @@ def big_quantity_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(cust, orders.o_custkey == cust.c_custkey)
         .join(li, F.col("o_orderkey") == li.l_orderkey)
         .groupBy("c_name", "o_orderkey", "o_orderdate")
-        .agg(fmt(F.sum("l_quantity")).alias("total_qty"))
+        .agg(F.sum("l_quantity").alias("total_qty"))
         .select(
             "c_name", "o_orderkey",
             F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate_str"),
-            "total_qty",
+            fmt("total_qty"),
         )
     )
 
@@ -248,8 +249,9 @@ def rich_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_mktsegment")
         .agg(
             F.count("*").cast("long").alias("n_cust"),
-            fmt(F.sum(cents("c_acctbal")).cast("double") / 100.0).alias("total_bal"),
+            (F.sum(cents("c_acctbal")).cast("double") / 100.0).alias("total_bal"),
         )
+        .withColumn("total_bal", fmt("total_bal"))
     )
 
 
@@ -292,9 +294,9 @@ def order_price_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ntile(4).over(w_total).cast("long").alias("quartile"),
         F.row_number().over(w_total).cast("long").alias("rn"),
         F.dense_rank().over(w_price).cast("long").alias("drank"),
-        fmt(F.percent_rank().over(w_price)).alias("pct_rank"),
-        fmt(F.cume_dist().over(w_price)).alias("cume"),
-    )
+        F.percent_rank().over(w_price).alias("pct_rank"),
+        F.cume_dist().over(w_price).alias("cume"),
+    ).withColumns({c: fmt(c) for c in ("pct_rank", "cume")})
 
 
 # =========================================================================
@@ -328,9 +330,9 @@ def rolling_hour_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return ev.select(
         "event_id",
-        fmt(F.sum("value").over(w)).alias("hour_sum"),
+        F.sum("value").over(w).alias("hour_sum"),
         F.count("*").over(w).cast("long").alias("hour_cnt"),
-    )
+    ).withColumn("hour_sum", fmt("hour_sum"))
 
 
 # =========================================================================
@@ -367,9 +369,8 @@ def event_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("value"))
     )
     return wide.select(
-        "day_str",
-        *[fmt(F.col(et)).alias(f"{et}_value") for et in _EVENT_TYPES],
-    )
+        "day_str", *[F.col(et).alias(f"{et}_value") for et in _EVENT_TYPES],
+    ).withColumns({f"{et}_value": fmt(f"{et}_value") for et in _EVENT_TYPES})
 
 
 # =========================================================================
@@ -415,7 +416,8 @@ def returnflag_metrics_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             "stack(3, 'sum_qty', sum_qty, 'sum_price', sum_price,"
             " 'sum_disc', sum_disc) AS (metric, raw_value)"
         ),
-    ).select("l_returnflag", "metric", fmt(F.col("raw_value")).alias("metric_value"))
+    ).selectExpr("l_returnflag", "metric", "raw_value AS metric_value").withColumn(
+        "metric_value", fmt("metric_value"))
 
 
 # =========================================================================
@@ -446,14 +448,14 @@ def returnflag_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.grouping_id().cast("long").alias("gid"),
             F.count("*").alias("n_items"),
-            fmt(F.sum(cents("l_extendedprice")).cast("double") / 100.0).alias("total_price"),
+            (F.sum(cents("l_extendedprice")).cast("double") / 100.0).alias("total_price"),
         )
         .select(
             F.coalesce("l_returnflag", F.lit("ALL")).alias("rflag"),
             F.coalesce("l_linestatus", F.lit("ALL")).alias("lstat"),
             "gid",
             "n_items",
-            "total_price",
+            fmt("total_price"),
         )
     )
 
@@ -481,10 +483,10 @@ def value_quantiles_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback is approx_percentile with bounded error (rows-only check)."""
     ev = t(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
-        fmt(F.percentile("value", 0.5)).alias("p50"),
-        fmt(F.percentile("value", 0.9)).alias("p90"),
-        fmt(F.percentile("value", 0.99)).alias("p99"),
-    )
+        F.percentile("value", 0.5).alias("p50"),
+        F.percentile("value", 0.9).alias("p90"),
+        F.percentile("value", 0.99).alias("p99"),
+    ).withColumns({c: fmt(c) for c in ("p50", "p90", "p99")})
 
 
 @register(
@@ -518,14 +520,14 @@ def value_quantiles_approx_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     j = ev.join(F.broadcast(appr), "event_type")
     g = j.groupBy("event_type").agg(
-        fmt(F.percentile("value", 0.5)).alias("p50"),
-        fmt(F.percentile("value", 0.9)).alias("p90"),
-        fmt(F.percentile("value", 0.99)).alias("p99"),
+        F.percentile("value", 0.5).alias("p50"),
+        F.percentile("value", 0.9).alias("p90"),
+        F.percentile("value", 0.99).alias("p99"),
         *[F.avg((F.col("value") <= F.col("a")[i]).cast("double")).alias(f"_f{i}")
           for i in range(3)],
     )
     return g.select(
-        "event_type", "p50", "p90", "p99",
+        "event_type", fmt("p50"), fmt("p90"), fmt("p99"),
         *[(F.abs(F.col(f"_f{i}") - F.lit(p)) <= 0.02).alias(f"{nm}_rank_ok")
           for i, (p, nm) in enumerate(((0.5, "p50"), (0.9, "p90"), (0.99, "p99")))],
     )
@@ -676,8 +678,9 @@ def order_price_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").cast("long").alias("n_orders"),
-            fmt(F.sum(cents("o_totalprice")).cast("double") / 100.0).alias("bucket_value"),
+            (F.sum(cents("o_totalprice")).cast("double") / 100.0).alias("bucket_value"),
         )
+        .withColumn("bucket_value", fmt("bucket_value"))
     )
 
 

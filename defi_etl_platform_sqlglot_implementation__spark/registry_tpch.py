@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .registry import cents, fmt, register, t
+from .registry import cents, cents_sql, fmt, register, t
 
 
 @register(
@@ -51,27 +51,20 @@ from .registry import cents, fmt, register, t
 def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape: segment-filtered customer (broadcast dim) against
     the orders ⋈ lineitem fact join, grouped revenue per order."""
-    cust = t(spark, sf_dir, "customer").filter(
-        F.col("c_mktsegment") == "BUILDING"
-    ).select("c_custkey")
-    orders = t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-06-01").cast("timestamp")
-    ).select("o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
-    li = t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-06-01").cast("timestamp")
-    ).select("l_orderkey", "l_extendedprice", "l_discount")
+    cust = t(spark, sf_dir, "customer").where("c_mktsegment = 'BUILDING'").select("c_custkey")
+    orders = t(spark, sf_dir, "orders").where("o_orderdate < TIMESTAMP '1998-06-01 00:00:00'").select(
+        "o_orderkey", "o_custkey", "o_orderdate", "o_orderpriority")
+    li = t(spark, sf_dir, "lineitem").where("l_shipdate > TIMESTAMP '1998-06-01 00:00:00'").select(
+        "l_orderkey", "l_extendedprice", "l_discount")
+    pc, dc = cents_sql("l_extendedprice"), cents_sql("l_discount")
     return (
-        orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
+        orders.join(F.broadcast(cust), F.expr("o_custkey = c_custkey"))
+        .join(li, F.expr("l_orderkey = o_orderkey"))
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(fmt(F.sum(cents("l_extendedprice")
-                      * (F.lit(100) - cents("l_discount")))
-                .cast("double") / 10000.0).alias("revenue"))
-        .select(
-            "l_orderkey", "revenue",
-            F.date_format("o_orderdate", "yyyy-MM-dd").alias("orderdate_str"),
-            "o_orderpriority",
-        )
+        .agg(F.expr(f"CAST(sum({pc} * (100 - {dc})) AS DOUBLE) / 10000.0D AS revenue"))
+        .select("l_orderkey", fmt("revenue"),
+                F.expr("date_format(o_orderdate, 'yyyy-MM-dd') AS orderdate_str"),
+                "o_orderpriority")
     )
 
 
@@ -122,11 +115,11 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
         .groupBy("n_name")
         .agg(
-            fmt(F.sum(cents("l_extendedprice")
-                      * (F.lit(100) - cents("l_discount")))
-                .cast("double") / 10000.0).alias("revenue"),
+            (F.sum(cents("l_extendedprice") * (F.lit(100) - cents("l_discount")))
+             .cast("double") / 10000.0).alias("revenue"),
             F.count("*").alias("n_items"),
         )
+        .withColumn("revenue", fmt("revenue"))
     )
 
 

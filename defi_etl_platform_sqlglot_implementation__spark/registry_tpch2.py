@@ -97,9 +97,10 @@ def bi_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("long").alias("order_year"),
         )
         .agg(
-            fmt(F.sum(_rev_col()).cast("double") / 10000.0).alias("revenue"),
+            (F.sum(_rev_col()).cast("double") / 10000.0).alias("revenue"),
             F.count("*").cast("long").alias("n_items"),
         )
+        .withColumn("revenue", fmt("revenue"))
     )
 
 
@@ -190,8 +191,9 @@ def top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("s_name").alias("supplier_name"),
             "suppkey",
-            fmt(F.col("total_rev").cast("double") / 10000.0).alias("total_rev"),
+            (F.col("total_rev").cast("double") / 10000.0).alias("total_rev"),
         )
+        .withColumn("total_rev", fmt("total_rev"))
     )
 
 

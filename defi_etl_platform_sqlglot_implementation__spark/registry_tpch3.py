@@ -208,13 +208,10 @@ def forecast_revenue_change(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_quantity") < 24.0)
     )
     return li.agg(
-        fmt(
-            F.sum(cents("l_extendedprice") * cents("l_discount")).cast(
-                "double"
-            ) / 10000.0
-        ).alias("revenue_delta"),
+        (F.sum(cents("l_extendedprice") * cents("l_discount")).cast("double")
+         / 10000.0).alias("revenue_delta"),
         F.count("*").alias("n_items"),
-    )
+    ).withColumn("revenue_delta", fmt("revenue_delta"))
 
 
 # =========================================================================
@@ -296,11 +293,10 @@ def nation_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             "o_year",
-            fmt(
-                F.coalesce(F.col("_num"), F.lit(0)).cast("double")
-                / F.col("_den").cast("double")
-            ).alias("mkt_share"),
+            (F.coalesce(F.col("_num"), F.lit(0)).cast("double")
+             / F.col("_den").cast("double")).alias("mkt_share"),
         )
+        .withColumn("mkt_share", fmt("mkt_share"))
     )
 
 
@@ -352,7 +348,8 @@ def product_type_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_name").alias("nation"),
             F.year("o_orderdate").cast("long").alias("o_year"),
         )
-        .agg(fmt(F.sum(_dec_volume()).cast("double") / 10000.0).alias("profit"))
+        .agg((F.sum(_dec_volume()).cast("double") / 10000.0).alias("profit"))
+        .withColumn("profit", fmt("profit"))
     )
 
 
@@ -403,15 +400,15 @@ def returned_item_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cust, orders.o_custkey == cust.c_custkey)
         .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
         .agg(F.sum(_dec_volume()).alias("_rev"))
-        # fmt is projected BEFORE the sort: a UDF projection after .limit()
-        # re-plans the top-k as a global range-partitioned Sort, while this
-        # shape keeps the Limit(Sort) adjacency Catalyst turns into
-        # TakeOrderedAndProject (per-partition top-20, no global sort).
+        # fmt is projected BEFORE the sort, which keeps the Limit(Sort)
+        # adjacency Catalyst turns into TakeOrderedAndProject (per-partition
+        # top-20, no global sort).
         .select(
             "c_custkey", "c_name",
-            fmt(F.col("_rev").cast("double") / 10000.0).alias("revenue"),
+            (F.col("_rev").cast("double") / 10000.0).alias("revenue"),
             "c_acctbal", "n_name", "_rev",
         )
+        .withColumn("revenue", fmt("revenue"))
         .orderBy(F.desc("_rev"), F.asc("c_custkey"))
         .limit(20)
         .drop("_rev")
@@ -533,12 +530,10 @@ def promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(vol).alias("_total"),
         )
         .select(
-            fmt(
-                F.lit(100.0)
-                * F.col("_promo").cast("double")
-                / F.col("_total").cast("double")
-            ).alias("promo_revenue_pct")
+            (F.lit(100.0) * F.col("_promo").cast("double")
+             / F.col("_total").cast("double")).alias("promo_revenue_pct")
         )
+        .withColumn("promo_revenue_pct", fmt("promo_revenue_pct"))
     )
 
 
@@ -642,7 +637,8 @@ def disjunctive_bracket_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(parts), li.l_partkey == parts.p_partkey)
         .filter(bracket)
         .agg(
-            fmt(F.sum(_dec_volume()).cast("double") / 10000.0).alias("revenue"),
+            (F.sum(_dec_volume()).cast("double") / 10000.0).alias("revenue"),
             F.count("*").alias("n_items"),
         )
+        .withColumn("revenue", fmt("revenue"))
     )

@@ -125,7 +125,7 @@ def session_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         F.date_format("session_end", "yyyy-MM-dd HH:mm:ss").alias("session_end"),
         "n_events",
-        fmt("session_value").alias("session_value"),
+        fmt("session_value"),
         "duration_s",
     )
 
@@ -166,10 +166,10 @@ def sliding_window_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("ws").agg(
         F.count("*").alias("n_events"),
-        fmt(F.sum("value")).alias("total_value"),
+        F.sum("value").alias("total_value"),
     ).select(
         F.date_format("ws", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "n_events", "total_value",
+        "n_events", fmt("total_value"),
     )
 
 
@@ -261,11 +261,9 @@ def twap_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wd.groupBy("user_id").agg(
         F.count("*").cast("long").alias("n_intervals"),
         F.sum("dur").cast("long").alias("total_dur_s"),
-        fmt(
-            F.sum(F.col("value_micro") * F.col("dur")).cast("double")
-            / F.sum("dur").cast("double") / F.lit(1e6)
-        ).alias("twap"),
-    )
+        (F.sum(F.col("value_micro") * F.col("dur")).cast("double")
+         / F.sum("dur").cast("double") / F.lit(1e6)).alias("twap"),
+    ).withColumn("twap", fmt("twap"))
 
 
 # =========================================================================

@@ -213,10 +213,8 @@ class DataService:
         # only the two columns mev_scores reads: engineer_transactions'
         # gas_price_gwei, without its rolling gas_p90 kernel, which
         # Catalyst cannot prune
-        tx = lift_transactions(events).select(
-            "block_number",
-            (F.col("gas_price").cast("double") / 1e9).alias("gas_price_gwei"),
-        )
+        tx = lift_transactions(events).selectExpr(
+            "block_number", "CAST(gas_price AS DOUBLE) / 1e9 AS gas_price_gwei")
 
         # the swap fixture covers the tx fixture's blocks
         block_nums = sorted({tx_block_number(i) for i in range(n)})
@@ -267,11 +265,9 @@ class DataService:
         # evaluates only the amount decode.
         groups = (
             decode_transfers(events)
-            .groupBy(F.date_trunc("hour", "block_timestamp").alias("hour"),
-                     "standard", "contract")
-            .agg(F.sum("amount").alias("volume"),
-                 F.count("tx_hash").alias("count"),
-                 F.count("*").alias("rows"))
+            .groupBy(F.expr("date_trunc('hour', block_timestamp) AS hour"), "standard", "contract")
+            .agg(F.expr("sum(amount) AS volume"), F.expr("count(tx_hash) AS count"),
+                 F.expr("count(*) AS rows"))
             .collect()
         )
 

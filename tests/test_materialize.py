@@ -4,6 +4,12 @@ throws cannot pin persisted frames for the session lifetime."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -11,6 +17,8 @@ from defi_etl_platform_sqlglot_implementation__spark.operators import (
     materialize,
 )
 from defi_etl_platform_sqlglot_implementation__spark.operators.bpe import train_bpe
+
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def _scoped_snapshot() -> list:
@@ -86,3 +94,66 @@ def test_train_bpe_failing_first_fill_pins_nothing(spark):
         assert _persistent_rdds(spark) == before
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
+
+
+def test_unpersist_on_a_stopped_session_ends_in_a_diagnosis(tmp_path):
+    """Failure injection: a scoped frame outlives its SparkContext.  The
+    next scope boundary must not fail on it, and must say why nothing was
+    released.  Runs in its own process: stopping the shared test session
+    would end every later test."""
+    script = tmp_path / "stopped.py"
+    script.write_text(textwrap.dedent("""
+        import warnings
+        from defi_etl_platform_sqlglot_implementation__spark import session
+        from defi_etl_platform_sqlglot_implementation__spark.operators import materialize
+
+        spark = session(1, "stopped-session")
+        materialize.scoped_persist(spark.range(10))
+        spark.stop()
+        with warnings.catch_warnings(record=True) as seen:
+            warnings.simplefilter("always")
+            print("released", materialize.release_scoped(), "left", len(materialize._SCOPED))
+        for w in seen:
+            print(w.category.__name__, w.message)
+    """))
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        [str(ROOT)] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p])}
+    out = subprocess.run([sys.executable, str(script)], capture_output=True, text=True,
+                         env=env, timeout=300)
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "released 0 left 0" in out.stdout, out.stdout
+    assert ("RuntimeWarning release_scoped: 1 frame(s) belong to a stopped SparkContext"
+            in out.stdout), out.stdout
+
+
+def test_lazy_persists_use_the_package_level(spark, monkeypatch):
+    from pyspark.storagelevel import StorageLevel
+
+    from defi_etl_platform_sqlglot_implementation__spark.operators import similarity
+    from defi_etl_platform_sqlglot_implementation__spark.operators.dedup import (
+        minhash_lsh_pairs,
+    )
+
+    docs = spark.createDataFrame([("abab abab",), ("abba",)], "text string")
+    with materialize.material_scope():
+        _, seqs = train_bpe(docs, n_merges=2)
+        assert seqs.storageLevel == StorageLevel.DISK_ONLY
+
+    levels = []
+
+    def spy(df):
+        out = materialize.lazy_persist(df)
+        levels.append(out.storageLevel)
+        return out
+
+    monkeypatch.setattr(similarity, "lazy_persist", spy)
+    emb = spark.createDataFrame([(i, [float(i), 1.0]) for i in range(8)],
+                                "vec_id long, embedding array<double>")
+    with materialize.material_scope():
+        similarity.kmeans_micro(emb, k=2, iters=1).collect()
+    assert levels == [StorageLevel.DISK_ONLY]
+
+    docs = spark.createDataFrame([(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string")
+    with materialize.material_scope():
+        minhash_lsh_pairs(docs).collect()
+        assert [df.storageLevel for df in materialize._SCOPED] == [StorageLevel.DISK_ONLY] * 3

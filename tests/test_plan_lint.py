@@ -1038,3 +1038,21 @@ def test_codebook_curve_is_maponly_assign_plus_cell_folds(spark):
     assert "InMemoryTableScan" in plan
     assert "hashpartitioning(cluster_id" in plan
     assert "hashpartitioning(vec_id" not in plan
+
+
+# -------------------------------------------------------------------------
+# The analytics_api gates run no Python worker (fmt is a JVM expression),
+# and the MEV gate is one aggregate per block.
+# -------------------------------------------------------------------------
+
+@pytest.mark.parametrize("name", ["pricing_summary", "shipping_priority",
+                                  "transfer_volume_hourly", "mev_scores"])
+def test_bench_gate_starts_no_python_worker(spark, name):
+    plan = _executed(spark, name)
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def test_mev_scores_is_one_shuffle(spark):
+    plan = _executed(spark, "mev_scores")
+    shuffles = [ln for ln in plan.splitlines() if ln.lstrip(" +-:*").startswith("Exchange ")]
+    assert len(shuffles) == 1, plan

@@ -94,24 +94,32 @@ class TestTransfersAggregate:
         assert len(sc.statusTracker().getJobIdsForGroup("transfers-jobs")) <= 2
 
     def test_plan_starts_no_python_worker(self, spark, monkeypatch):
-        plans, cls = [], type(spark.range(1))  # the session's concrete DataFrame
-        collect = cls.collect
-
-        def spy(self):
-            plans.append(self._jdf.queryExecution().executedPlan().toString())
-            return collect(self)
-
-        monkeypatch.setattr(cls, "collect", spy)
-        DataService(spark).get_transfer_data()
-        assert plans
-        for plan in plans:
-            assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+        _assert_no_python_worker(spark, monkeypatch, DataService(spark).get_transfer_data)
 
     def test_payload_equals_the_three_aggregate_form(self, spark, monkeypatch):
         monkeypatch.setattr(data_service, "time",
                             types.SimpleNamespace(time=lambda: 1_700_000_000.0))
         svc = DataService(spark)
         assert _json(svc.get_transfer_data()) == _json(_three_aggregate_transfers(svc))
+
+
+def _assert_no_python_worker(spark, monkeypatch, route):
+    plans, cls = [], type(spark.range(1))  # the session's concrete DataFrame
+    collect = cls.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", spy)
+    route()
+    assert plans
+    for plan in plans:
+        assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+
+
+def test_mev_route_plan_starts_no_python_worker(spark, monkeypatch):
+    _assert_no_python_worker(spark, monkeypatch, DataService(spark).get_mev_data)
 
 
 @pytest.mark.parametrize("route", ["get_var_data", "get_mev_data"])

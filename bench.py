@@ -233,7 +233,9 @@ def main() -> None:
     # JVM/codegen warm-up outside the timed region, plus a full-width
     # pandas-UDF stage so all Python workers exist before timing starts
     # (steady-state clusters reuse workers; a cold 32-process spawn costs
-    # tens of seconds and would land on whichever query runs first).
+    # tens of seconds and would land on whichever query runs first).  The
+    # EIP-55 kernel also runs worker.install_zip_stamps in every one of
+    # them, so no timed task re-reads the pyspark.zip directories.
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     from pyspark.sql import functions as F
 

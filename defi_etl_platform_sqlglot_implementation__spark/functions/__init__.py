@@ -8,13 +8,12 @@ from .keccak import (
 )
 from .hex import (
     eip55_checksum,
-    fn_selector,
     hex_to_double,
     hex_to_double_sql,
     hex_to_long,
     hex_to_long_sql,
 )
-from .maps import TOKEN_STANDARDS, token_standards_col, token_standards_df
+from .maps import TOKEN_STANDARDS, token_standards_col, token_standards_df, token_standards_sql
 
 __all__ = [
     "ERC20_TRANSFER_TOPIC",
@@ -24,7 +23,6 @@ __all__ = [
     "keccak_256_hex",
     "to_checksum_address",
     "eip55_checksum",
-    "fn_selector",
     "hex_to_double",
     "hex_to_double_sql",
     "hex_to_long",
@@ -32,4 +30,5 @@ __all__ = [
     "TOKEN_STANDARDS",
     "token_standards_col",
     "token_standards_df",
+    "token_standards_sql",
 ]

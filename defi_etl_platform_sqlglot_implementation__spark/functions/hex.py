@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import StringType
 
+from ..worker import install_zip_stamps
 from .keccak import to_checksum_address as _checksum
 
 _TOP = 16  # nibbles conv turns into an exact unsigned 64-bit value
@@ -89,6 +90,7 @@ def eip55_checksum(s: pd.Series) -> pd.Series:
     normal shape (42-char 0x-addresses) — ~1000x the scalar throughput;
     falls back to the scalar implementation for irregular inputs.
     """
+    install_zip_stamps()
     if len(s) and s.dropna().str.len().eq(42).all():
         from .keccak_batch import eip55_checksum_batch
 
@@ -106,8 +108,3 @@ def eip55_checksum(s: pd.Series) -> pd.Series:
             return s.map(mapped)
         return eip55_checksum_batch(s)
     return s.map(lambda a: None if a is None else _checksum(a))
-
-
-def fn_selector(input_col: Column) -> Column:
-    """First 10 chars ('0x' + 8 hex) of calldata (etl_pipeline.py:221)."""
-    return F.substring(input_col, 1, 10)

@@ -2,9 +2,10 @@
 
 Two idiomatic Spark forms of the same 5-entry dict:
 
-- ``token_standards_col``: a ``create_map`` literal — Catalyst constant-folds
-  the lookup into the projection; zero shuffle, stays in codegen. This is the
-  right shape for a literal this small at any scale.
+- ``token_standards_sql``: a SQL ``map(...)`` literal — Catalyst
+  constant-folds the lookup into the projection; zero shuffle, stays in
+  codegen. This is the right shape for a literal this small at any scale.
+  ``token_standards_col`` is its one-column form.
 - ``token_standards_df``: the same mapping as a tiny DataFrame for an explicit
   ``broadcast`` hash join, the pattern that generalizes when the lookup grows
   beyond a literal (SURVEY.md §2.3 J3).
@@ -27,14 +28,17 @@ TOKEN_STANDARDS = {
     "0xf242432a": "ERC1155.safeTransferFrom",
 }
 
-def _map_literal() -> Column:
-    # built lazily — Column construction needs an active SparkContext
-    return F.create_map(*[F.lit(x) for x in chain.from_iterable(TOKEN_STANDARDS.items())])
+def token_standards_sql(selector: str) -> str:
+    """Map lookup with the reference's ``.fillna("unknown")`` semantics;
+    ``selector`` and the result are SQL text."""
+    pairs = ", ".join(f"'{x}'" for x in chain.from_iterable(TOKEN_STANDARDS.items()))
+    return f"coalesce(map({pairs})[{selector}], 'unknown')"
 
 
-def token_standards_col(selector: Column) -> Column:
-    """Map lookup with the reference's ``.fillna("unknown")`` semantics."""
-    return F.coalesce(_map_literal()[selector], F.lit("unknown"))
+def token_standards_col(selector: str) -> Column:
+    """:func:`token_standards_sql` as a column; ``selector`` is a SQL
+    expression (a column name is one)."""
+    return F.expr(token_standards_sql(selector))
 
 
 def token_standards_df(spark: SparkSession) -> DataFrame:

@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import install_zip_stamps
+
 DEFAULT_WINDOW_S = 86_400   # one day — ~30% suppression on the driver corpus
 
 
@@ -77,6 +79,7 @@ def debounce_events(
     k0, k1 = key_cols
 
     def scan(pdf: pd.DataFrame) -> pd.DataFrame:
+        install_zip_stamps()
         pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
         n = len(pdf)
         kept_idx = greedy_kept_positions(pdf[ts_col].tolist(), delta)

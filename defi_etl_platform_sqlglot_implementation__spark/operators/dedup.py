@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from ..sources.bronze import local_frame
+from ..worker import install_zip_stamps
 from .materialize import disk_ckpt, lazy_persist
 
 DEFAULT_NUM_HASHES = 32
@@ -373,6 +374,7 @@ def _minhash_arrow_batches(num_hashes: int, batches):
     and a null shingle element hashes to the seed (42) — both exactly
     what the expression form yields.
     """
+    install_zip_stamps()
     import numpy as np
     import pyarrow as pa
 

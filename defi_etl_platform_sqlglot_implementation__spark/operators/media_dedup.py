@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..worker import install_zip_stamps
 from .multimodal import bmp_rgb_array, build_bmp, build_wav, wav_pcm_array
 
 AHASH_SCHEMA = StructType(
@@ -87,6 +88,7 @@ def image_ahash_signatures(docs: DataFrame) -> DataFrame:
     import numpy as np
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_stamps()
         ys, xs = np.mgrid[0:8, 0:8]         # [y][x] row-major grids
         ii = ys * 8 + xs                    # aHash bit index per cell
         for pdf in batches:
@@ -188,6 +190,7 @@ def audio_fingerprint_signatures(docs: DataFrame) -> DataFrame:
     import numpy as np
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_stamps()
         idx = np.arange(256, dtype=np.int64)
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "fingerprint", "sample_sig")}

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..worker import install_zip_stamps
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -78,6 +80,7 @@ def decode_features(media: DataFrame, fake: bool = False,
     """
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_stamps()
         for pdf in batches:
             if not fake:
                 raise NotImplementedError(
@@ -367,6 +370,7 @@ def decode_bmp_pixels(media: DataFrame) -> DataFrame:
     import numpy as np
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_stamps()
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "width", "height", "n_pixels",
                                    "sum_r", "sum_g", "sum_b", "pixel_md5")}
@@ -438,6 +442,7 @@ def decode_wav_features(media: DataFrame) -> DataFrame:
     import numpy as np
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_stamps()
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "sample_rate", "n_channels",
                                    "n_samples", "duration_ms", "peak_abs",
@@ -511,6 +516,7 @@ def sample_avi_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     import struct
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_stamps()
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "n_frames", "frame_rate_us",
                                    "width", "height", "frame_idx",
@@ -607,6 +613,7 @@ def resize_bmp_images(media: DataFrame, out_w: int = 4, out_h: int = 4) -> DataF
     import numpy as np
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_stamps()
         for pdf in batches:
             out = {k: [] for k in ("doc_id", "src_w", "src_h", "out_w",
                                    "out_h", "sum_r", "sum_g", "sum_b",

@@ -13,6 +13,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..worker import install_zip_stamps
+
 
 def salted_group_agg(
     df: DataFrame,
@@ -113,8 +115,7 @@ def _rolling_apply(
     def extend(base: StructType) -> StructType:
         return StructType(list(base.fields) + [StructField(out, DoubleType())])
 
-    schema = extend(df.schema)
-    cols = list(df.columns)
+    schema = df.schema
     order = list(order_cols)
 
     def kernel(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -124,18 +125,21 @@ def _rolling_apply(
 
     if partition_col is None:
         def fn(batches):
+            install_zip_stamps()
             parts = [b for b in batches]
             if not parts:
                 return
             yield kernel(pd.concat(parts, ignore_index=True))
 
-        return df.repartition(1).mapInPandas(fn, schema)
+        return df.repartition(1).mapInPandas(fn, extend(schema))
+
+    def per_part(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        install_zip_stamps()
+        return kernel(pdf)
 
     tagged = df.withColumn("_part", partition_col)
-    out_df = tagged.groupBy("_part").applyInPandas(
-        lambda pdf: kernel(pdf), extend(tagged.schema)
-    )
-    return out_df.select(*cols, out)
+    out_df = tagged.groupBy("_part").applyInPandas(per_part, extend(tagged.schema))
+    return out_df.select(*schema.fieldNames(), out)
 
 
 def rolling_quantile_exact(

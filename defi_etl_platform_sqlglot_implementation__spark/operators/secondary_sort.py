@@ -36,6 +36,8 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..worker import install_zip_stamps
+
 
 def ordered_user_features(
     df: DataFrame,
@@ -62,6 +64,7 @@ def ordered_user_features(
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         # carry: key -> (last_ts_epoch_s, seq_so_far, max_so_far); only keys
         # straddling a batch edge survive here, so the dict stays tiny.
+        install_zip_stamps()
         carry: dict = {}
         for pdf in batches:
             n = len(pdf)

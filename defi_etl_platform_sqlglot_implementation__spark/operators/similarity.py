@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.bronze import local_frame
+from ..worker import install_zip_stamps
 from .materialize import lazy_persist
 
 # (centroid_id, embedding): the frame both k-means trainers return
@@ -76,6 +77,7 @@ def fold_dot_udf():
     from pyspark.sql.types import DoubleType
 
     def _fold_dot(a, b):
+        install_zip_stamps()
         n = len(a)
         if not n:
             return pd.Series([], dtype="float64")
@@ -278,6 +280,7 @@ def _assign_apply(
     from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 
     def _best(col: pd.Series) -> pd.DataFrame:
+        install_zip_stamps()
         import numpy as np
 
         if not len(col):
@@ -341,6 +344,7 @@ def assign_clusters_multi(
     cid_arr, sims = _assign_sims(cids, mat)
 
     def _best(col: pd.Series) -> pd.DataFrame:
+        install_zip_stamps()
         import numpy as np
 
         if not len(col):
@@ -389,6 +393,7 @@ def assign_clusters_top2(
             f"(got {len(cid_arr)}) — a runner-up must exist")
 
     def _top2(col: pd.Series) -> pd.DataFrame:
+        install_zip_stamps()
         import numpy as np
 
         if not len(col):
@@ -448,6 +453,7 @@ def assign_clusters_probe(
     cid_arr, sims = _assign_sims(*_centroid_matrix(centroids, vec_col, id_col))
 
     def _probes(col: pd.Series) -> pd.Series:
+        install_zip_stamps()
         import numpy as np
 
         if not len(col):
@@ -568,6 +574,7 @@ def _cross_cosine_batches(q_rows, qlab_type, batches):
     here the training batch crosses once and the query matrix rides the
     task closure.
     """
+    install_zip_stamps()
     import numpy as np
     import pyarrow as pa
 
@@ -691,6 +698,7 @@ def _pq_adc_batches(cb_rows, q_rows, m, dsub, batches):
     subspace).  Self-pairs (neighbor == query id) are excluded, as the
     join condition did.
     """
+    install_zip_stamps()
     import numpy as np
     import pyarrow as pa
 
@@ -1180,6 +1188,7 @@ def mmr_select(
                   "rel_micro long, maxsim_micro long, mmr_score long")
 
     def greedy(pdf):
+        install_zip_stamps()
         import pandas as pd
 
         rel = {}

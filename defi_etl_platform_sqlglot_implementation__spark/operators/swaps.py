@@ -32,13 +32,19 @@ from ..functions.keccak import UNISWAP_V2_SWAP_TOPIC
 _SLOTS = ("amount0_in", "amount1_in", "amount0_out", "amount1_out")
 
 
-def swap_price(a0i: Column, a1i: Column, a0o: Column, a1o: Column) -> Column:
-    """Reference price fallback chain (etl_pipeline.py:159), faithfully."""
-    alt = a0o / a1i
-    return (
-        F.when(a0i != 0.0, a1o / a0i)
-        .otherwise(F.when(alt != 0.0, alt).otherwise(F.lit(1.0)))
-    )
+def swap_price_sql(a0i: str, a1i: str, a0o: str, a1o: str) -> str:
+    """Reference price fallback chain (etl_pipeline.py:159), faithfully:
+    ``a1o/a0i if a0i else (a0o/a1i or 1)``.  The amounts and the result
+    are SQL text."""
+    alt = f"({a0o}) / ({a1i})"
+    return (f"CASE WHEN ({a0i}) != 0.0D THEN ({a1o}) / ({a0i})"
+            f" WHEN {alt} != 0.0D THEN {alt} ELSE 1.0D END")
+
+
+def swap_price(a0i: str, a1i: str, a0o: str, a1o: str) -> Column:
+    """:func:`swap_price_sql` as a column; the amounts are SQL expressions
+    (a column name is one)."""
+    return F.expr(swap_price_sql(a0i, a1i, a0o, a1o))
 
 
 def parse_swaps(events: DataFrame) -> DataFrame:
@@ -68,7 +74,7 @@ def parse_swaps(events: DataFrame) -> DataFrame:
         "chain_id",
         "coalesce(payload.tx_hash, '') AS tx_hash",
     )
-    return parsed.select(
-        "protocol", "pool", *_SLOTS, swap_price(*[F.col(c) for c in _SLOTS]).alias("price"),
+    return parsed.selectExpr(
+        "protocol", "pool", *_SLOTS, f"{swap_price_sql(*_SLOTS)} AS price",
         "block_number", "block_timestamp", "chain_id", "tx_hash",
     )

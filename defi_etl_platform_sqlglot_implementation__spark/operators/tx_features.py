@@ -33,8 +33,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.hex import fn_selector as _fn_selector
-from ..functions.maps import token_standards_col
+from ..functions.maps import token_standards_sql
 
 GAS_P90_WINDOW = 100  # trailing rows, reference etl_pipeline.py:230
 
@@ -46,23 +45,24 @@ def engineer_transactions(
 ) -> DataFrame:
     """Raw tx payload columns (+ envelope block_number/block_timestamp/
     chain_id) -> engineered feature columns (SURVEY.md §1.4 `transactions`).
+    The features are one projection of SQL text, then the rolling p90
+    kernel and ``is_high_priority`` over it.
     """
     cols = set(tx.columns)
-    df = tx
-
+    feats = {}
     if "gas_price" in cols:
-        df = df.withColumn("gas_price_gwei", F.col("gas_price").cast("double") / 1e9)
+        feats["gas_price_gwei"] = "CAST(gas_price AS DOUBLE) / 1e9D"
     if "value_wei" in cols:
-        df = df.withColumn("value_eth", F.col("value_wei").cast("double") / 1e18)
-
-    df = df.withColumn("is_contract_deploy", F.col("to").isNull())
-
+        feats["value_eth"] = "CAST(value_wei AS DOUBLE) / 1e18D"
+    feats["is_contract_deploy"] = "`to` IS NULL"
     if "input" in cols:
-        df = (
-            df.withColumn("fn_selector", _fn_selector(F.col("input")))
-            .withColumn("fn_name", token_standards_col(F.col("fn_selector")))
-            .withColumn("is_defi_tx", F.col("fn_name") != "unknown")
-        )
+        selector = "substring(input, 1, 10)"  # '0x' + 8 hex of calldata (:221)
+        fn_name = token_standards_sql(selector)
+        feats.update(fn_selector=selector, fn_name=fn_name,
+                     is_defi_tx=f"{fn_name} != 'unknown'")
+    # withColumns: one projection that, like withColumn, replaces a column
+    # of the same name in place
+    df = tx.withColumns({name: F.expr(sql) for name, sql in feats.items()})
 
     if "gas_price" in cols:
         from .scale import rolling_quantile_pandas
@@ -75,7 +75,7 @@ def engineer_transactions(
             out="gas_p90",
             partition_col=F.col(partition_col) if partition_col is not None else None,
         )
-        df = df.withColumn("is_high_priority", F.col("gas_price_gwei") > F.col("gas_p90"))
+        df = df.withColumn("is_high_priority", F.expr("gas_price_gwei > gas_p90"))
 
     return df
 
@@ -83,13 +83,12 @@ def engineer_transactions(
 def aggregate_by_block(tx: DataFrame) -> DataFrame:
     """Per-block multi-aggregate (etl_pipeline.py:238-252): one hash
     aggregate with map-side partial aggregation — no window, no sort."""
-    cols = set(tx.columns)
-    count_col = "hash" if "hash" in cols else "block_number"
-    return tx.groupBy("block_number").agg(
-        F.count(count_col).alias("tx_count"),
-        F.sum("value_eth").alias("total_eth_volume"),
-        F.avg("gas_price_gwei").alias("avg_gas_price_gwei"),
-        F.max("gas_price_gwei").alias("max_gas_price_gwei"),
-        F.sum(F.col("is_defi_tx").cast("long")).alias("defi_tx_count"),
-        F.sum(F.col("is_contract_deploy").cast("long")).alias("contract_deploys"),
-    )
+    count_col = "hash" if "hash" in tx.columns else "block_number"
+    return tx.groupBy("block_number").agg(*[F.expr(e) for e in (
+        f"count({count_col}) AS tx_count",
+        "sum(value_eth) AS total_eth_volume",
+        "avg(gas_price_gwei) AS avg_gas_price_gwei",
+        "max(gas_price_gwei) AS max_gas_price_gwei",
+        "sum(CAST(is_defi_tx AS BIGINT)) AS defi_tx_count",
+        "sum(CAST(is_contract_deploy AS BIGINT)) AS contract_deploys",
+    )])

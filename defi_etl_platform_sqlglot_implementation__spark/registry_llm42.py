@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .registry import register, t
+from .worker import install_zip_stamps
 
 _G_NODES = 256      # graph size — fixed benchmark cap (vec_id-ordered)
 _G_K = 8            # out-degree of the kNN digraph
@@ -286,6 +287,7 @@ def _beam_search_multi(graph: DataFrame, qn: DataFrame,
     hops = _G_HOPS
 
     def search(pdf: pd.DataFrame) -> pd.DataFrame:
+        install_zip_stamps()
         qid = int(pdf["qid"].iloc[0])
         nodes = pdf["node"].to_numpy()
         scores = pdf["score"].to_numpy()

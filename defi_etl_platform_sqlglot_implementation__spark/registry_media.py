@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from .registry import register, t
+from .worker import install_zip_stamps
 
 _BASES_SQL = """
     bases AS (
@@ -229,6 +230,7 @@ def multimodal_resize_real(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     def gen(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        install_zip_stamps()
         import numpy as np
 
         for pdf in batches:

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.debounce import DEFAULT_WINDOW_S, greedy_kept_positions
+from ..worker import install_zip_stamps
 
 
 class DebounceState:
@@ -72,6 +73,7 @@ class DebounceState:
                 "last_ts", F.lit(None).cast("timestamp"))
 
         def scan(pdf: pd.DataFrame) -> pd.DataFrame:
+            install_zip_stamps()
             pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort")
             seed = pdf["last_ts"].iloc[0]
             kept_idx = greedy_kept_positions(

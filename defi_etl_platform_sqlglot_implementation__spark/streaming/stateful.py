@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..worker import install_zip_stamps
+
 RUNNING_STATS_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -63,6 +65,7 @@ def _update_stats(
     pdfs: Iterable[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
+    install_zip_stamps()
     if state.exists:
         n, total, mx = state.get
     else:
@@ -101,6 +104,7 @@ _TOKEN_STATE_SCHEMA = StructType([StructField("cnt", LongType())])
 
 
 def _update_token_count(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
+    install_zip_stamps()
     n = 0
     for pdf in pdfs:
         n += len(pdf)
@@ -210,6 +214,7 @@ def _update_ewma(key, pdfs: Iterable[pd.DataFrame], state: GroupState):
     """Recursive EWMA state machine: ewma <- a*x + (1-a)*ewma, seeded with
     the first observation (pandas ewm(adjust=False) semantics, so the
     batch parity target is exact, not asymptotic)."""
+    install_zip_stamps()
     if state.exists:
         n, ewma = state.get
     else:

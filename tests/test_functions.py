@@ -3,7 +3,6 @@
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from defi_etl_platform_sqlglot_implementation__spark.functions.keccak import (
     ERC20_TRANSFER_TOPIC,
@@ -141,6 +140,6 @@ class TestSelectorMap:
     def test_lookup_and_fill(self, spark):
         sels = list(TOKEN_STANDARDS) + ["0xdeadbeef", None]
         df = spark.createDataFrame([(s,) for s in sels], "sel: string")
-        got = [r[0] for r in df.select(token_standards_col(F.col("sel"))).collect()]
+        got = [r[0] for r in df.select(token_standards_col("sel")).collect()]
         assert got[: len(TOKEN_STANDARDS)] == list(TOKEN_STANDARDS.values())
         assert got[-2:] == ["unknown", "unknown"]

@@ -165,3 +165,69 @@ def test_table_reads_infer_the_schema_once_per_table_version(spark, tmp_path):
     assert registry.t(spark, str(tmp_path), "tbl").columns == ["a", "b"]
     with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         registry.t(spark, str(tmp_path), "missing")
+
+
+KERNEL_APIS = {"mapInPandas", "applyInPandas", "applyInPandasWithState", "mapInArrow",
+               "applyInArrow"}
+
+
+def _named(node, name):
+    return isinstance(node, ast.Call) and name in (getattr(node.func, "id", None),
+                                                   getattr(node.func, "attr", None))
+
+
+def kernel_sites(tree):
+    """(line, kernel def or None) for every Python kernel one module hands
+    to Spark: ``@pandas_udf`` defs, ``pandas_udf(T)(fn)``, and the function
+    passed to the ``KERNEL_APIS`` (through ``functools.partial`` too),
+    resolved by name through the enclosing function scopes."""
+    owner = {}
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            owner[child] = scope
+            visit(child, child if isinstance(child, ast.FunctionDef) else scope)
+
+    visit(tree, tree)
+    defs = [n for n in owner if isinstance(n, ast.FunctionDef)]
+
+    def resolve(arg, at):
+        if _named(arg, "partial"):
+            return resolve(arg.args[0], at)
+        scope = owner[at]
+        while isinstance(arg, ast.Name):
+            hits = [d for d in defs if d.name == arg.id and owner[d] is scope]
+            if hits:
+                return hits[-1]
+            if scope is tree:
+                break
+            scope = owner[scope]
+        return None
+
+    sites = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.FunctionDef) and any(_named(d, "pandas_udf")
+                                                     for d in node.decorator_list):
+            sites.append((node.lineno, node))
+        elif isinstance(node, ast.Call) and (
+                getattr(node.func, "attr", None) in KERNEL_APIS or _named(node.func, "pandas_udf")):
+            sites.append((node.lineno, resolve(node.args[0], node) if node.args else None))
+    return sites
+
+
+def test_every_python_kernel_stamps_its_workers_zip_imports():
+    """Each kernel's first statement (after its docstring) is
+    ``install_zip_stamps()``: a by-value closure does not import the
+    package on the worker, so nothing else would run it (worker.py)."""
+    sites, missing = 0, []
+    for path in sorted(gates.PKG_DIR.rglob("*.py")):
+        for line, fn in kernel_sites(ast.parse(path.read_text())):
+            sites += 1
+            body = fn.body if fn is not None else []
+            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
+                body = body[1:]
+            first = body[0].value if body and isinstance(body[0], ast.Expr) else None
+            if not (_named(first, "install_zip_stamps") and not first.args):
+                missing.append(f"{path.relative_to(ROOT)}:{line}")
+    assert sites >= 25  # the walk still finds the package's kernels
+    assert missing == []

@@ -53,8 +53,6 @@ class TestHexDecodeProperties:
     def test_swap_price_matches_python_semantics(self, spark):
         import random
 
-        from pyspark.sql import functions as F
-
         from defi_etl_platform_sqlglot_implementation__spark.operators.swaps import swap_price
 
         rng = random.Random(7)
@@ -67,7 +65,7 @@ class TestHexDecodeProperties:
             rows.append((a0i, a1i, a0o, a1o))
         df = spark.createDataFrame(rows, ["a0i", "a1i", "a0o", "a1o"])
         got = df.select(
-            swap_price(F.col("a0i"), F.col("a1i"), F.col("a0o"), F.col("a1o")).alias("p"),
+            swap_price("a0i", "a1i", "a0o", "a1o").alias("p"),
             "a0i", "a1i", "a0o", "a1o",
         ).collect()
         for r in got:

@@ -30,6 +30,25 @@ class TestParseSwaps:
         r = parse_swaps(events_df(spark, [msg])).collect()[0]
         assert r["price"] == 1.0
 
+    def test_price_case_equals_the_column_chain(self, spark):
+        # zero denominators on either side, and results of 0 with and
+        # without the `or 1` fallback, against the Column chain the SQL
+        # CASE replaced and the reference's own expression
+        from pyspark.sql import functions as F
+
+        rows = [(0, 5, 0, 7), (0, 4, 8, 0), (3, 0, 0, 6), (3, 0, 0, 0), (0, 3, 0, 0),
+                (7, 0, 5, 0), (2, 3, 4, 5)]
+        msgs = [make_swap_message(*r, block_number=18_000_000 + i) for i, r in enumerate(rows)]
+        a0i, a1i, a0o, a1o = (F.col(c) for c in
+                              ("amount0_in", "amount1_in", "amount0_out", "amount1_out"))
+        alt = a0o / a1i
+        chain = F.when(a0i != 0.0, a1o / a0i).otherwise(F.when(alt != 0.0, alt).otherwise(1.0))
+        got = (parse_swaps(events_df(spark, msgs))
+               .select("block_number", "price", chain.alias("chain"))
+               .orderBy("block_number").collect())
+        want = [float((d / a) if a else ((c / b) or 1)) for a, b, c, d in rows]
+        assert [r["price"] for r in got] == [r["chain"] for r in got] == want
+
     def test_both_denominators_zero_dropped(self, spark):
         # reference raises ZeroDivisionError -> except -> row dropped
         msg = make_swap_message(a0i=0, a1i=0, a0o=5, a1o=5)

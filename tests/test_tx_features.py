@@ -86,6 +86,39 @@ class TestEngineer:
         assert (last["gas_price_gwei"], last["gas_p90"]) == (x, x)
         assert last["is_high_priority"] is False
 
+    def test_features_equal_the_column_form(self, spark):
+        # NULL `to`, an unknown selector and NULL `input`: the SQL-text
+        # projection equals the withColumn chain it replaced, column for
+        # column (names, order, types, nullability and values)
+        from itertools import chain
+
+        from pyspark.sql import functions as F
+
+        from defi_etl_platform_sqlglot_implementation__spark.functions.maps import (
+            TOKEN_STANDARDS,
+        )
+
+        msgs = [make_transaction_message(to=None, nonce=0),
+                make_transaction_message(input_data="0xdeadbeef" + "0" * 56, nonce=1),
+                make_transaction_message(input_data=None, nonce=2),
+                make_transaction_message(input_data="0x095ea7b3", nonce=3)]
+        tx = lift_transactions(events_df(spark, msgs))
+        lookup = F.create_map(*[F.lit(x) for x in chain.from_iterable(TOKEN_STANDARDS.items())])
+        want = (tx.withColumn("gas_price_gwei", F.col("gas_price").cast("double") / 1e9)
+                .withColumn("value_eth", F.col("value_wei").cast("double") / 1e18)
+                .withColumn("is_contract_deploy", F.col("to").isNull())
+                .withColumn("fn_selector", F.substring(F.col("input"), 1, 10))
+                .withColumn("fn_name", F.coalesce(lookup[F.col("fn_selector")], F.lit("unknown")))
+                .withColumn("is_defi_tx", F.col("fn_name") != "unknown"))
+        got = engineer_transactions(tx)
+        assert got.columns == want.columns + ["gas_p90", "is_high_priority"]
+        assert got.schema.fields[:len(want.columns)] == want.schema.fields
+        rows = got.select(*want.columns).orderBy("nonce").collect()
+        assert rows == want.orderBy("nonce").collect()
+        assert [(r["fn_name"], r["is_defi_tx"], r["is_contract_deploy"]) for r in rows] == [
+            ("ERC20.transfer", True, True), ("unknown", False, False),
+            ("unknown", False, False), ("ERC20.approve", True, False)]
+
 
 class TestAggregateByBlock:
     def test_counts_and_sums(self, spark):
